@@ -376,8 +376,7 @@ def q_meds_pipeline_e2e(spark, sf_dir):
         .localCheckpoint(eager=False)
     )
     meta2 = fit_vocabulary_indices(
-        aggregate_code_metadata(d2, aggregations=stats_aggs, sum_decimal_scale=6),
-        validate=False,
+        aggregate_code_metadata(d2, aggregations=stats_aggs, sum_decimal_scale=6)
     )
     return normalization(d2, meta2).select("subject_id", "time", "code", "numeric_value")
 

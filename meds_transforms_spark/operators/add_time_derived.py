@@ -26,16 +26,27 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from meds_transforms_spark.operators.base import register_stage
 from meds_transforms_spark.functions.time_units import normalize_time_unit
 from meds_transforms_spark.schema import CODE, NUMERIC_VALUE, SUBJECT_ID, TIME
 
 
-def _micros(col):
+def _micros(df: DataFrame, col):
     """Timestamp → exact epoch microseconds (long). Exact integer µs —
     NOT a double cast, which at epoch magnitude has ~0.5 µs quantization
-    that breaks oracle-exact comparisons."""
+    that breaks oracle-exact comparisons.
+
+    ``col`` has the type of ``df``'s ``time``. A tz-naive MEDS ``time``
+    reads as TIMESTAMP_NTZ, which ``unix_micros`` rejects; its wall clock
+    is rebuilt field by field as a UTC TIMESTAMP, so no session time zone
+    (nor its DST gaps and overlaps) enters the result."""
+    if isinstance(df.schema[TIME].dataType, T.TimestampNTZType):
+        col = F.make_timestamp_ltz(
+            F.year(col), F.month(col), F.dayofmonth(col), F.hour(col),
+            F.minute(col), F.extract(F.lit("SECOND"), col), F.lit("UTC"),
+        )
     return F.unix_micros(col)
 
 
@@ -75,7 +86,9 @@ def age_rows(
         .select(SUBJECT_ID, TIME, "__dob")
         .dropDuplicates([SUBJECT_ID, TIME])
     )
-    age = (_micros(F.col(TIME)) - _micros(F.col("__dob"))) / F.lit(unit_seconds * 1e6)
+    age = (_micros(df, F.col(TIME)) - _micros(df, F.col("__dob"))) / F.lit(
+        unit_seconds * 1e6
+    )
     return (
         events.filter(F.col(TIME) > F.col("__dob"))
         .select(
@@ -148,7 +161,7 @@ def timeline_tokens_rows(
     base = events.withColumn("__start", F.min(TIME).over(per_subject)).withColumn(
         "__end", F.max(TIME).over(per_subject)
     )
-    delta = (_micros(F.col(TIME)) - _micros(F.lag(TIME).over(ordered))) / F.lit(
+    delta = (_micros(df, F.col(TIME)) - _micros(df, F.lag(TIME).over(ordered))) / F.lit(
         unit_seconds * 1e6
     )
     deltas = base.withColumn("__delta", delta).filter(F.col("__delta").isNotNull())

@@ -4,13 +4,14 @@ Reference semantics (src/MEDS_transforms/stages/fit_vocabulary_indices/
 fit_vocabulary_indices.py:108-195): assign each unique (code, *modifiers)
 a dense 1-based index in lexicographic order WITHOUT reordering the
 table (argsort-of-argsort trick, :164-195); index 0 is reserved for
-"UNK". Uniqueness of the key set is validated first (:98-105).
+"UNK". The key set must be unique (:98-105).
 
 Spark plan: the code table is vocabulary-sized (broadcast downstream),
 so the rank is a single-partition sort + Arrow index pass
-(ids.attach_dense_rank_bounded) behind a hard max_rows guard. No
-argsort trick needed: the dense index in the total order IS the rank,
-attached without reordering the caller's frame semantics.
+(ids.attach_dense_rank_bounded), which also rejects duplicate keys and
+enforces a hard max_rows bound. No argsort trick needed: the dense
+index in the total order IS the rank, attached without reordering the
+caller's frame semantics.
 """
 
 from __future__ import annotations
@@ -21,89 +22,35 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from meds_transforms_spark.operators.base import register_stage
+from meds_transforms_spark.operators.ids import attach_dense_rank_bounded
 from meds_transforms_spark.schema import CODE
-
-
-class CodeMetadataNotUniqueError(ValueError):
-    pass
-
-
-def validate_code_metadata(code_metadata: DataFrame, keys: Sequence[str]) -> None:
-    """Uniqueness check (fit_vocabulary_indices.py:98-105)."""
-    dupes = (
-        code_metadata.groupBy(*keys)
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(100)
-        .collect()
-    )
-    if dupes:
-        raise CodeMetadataNotUniqueError(
-            f"Code metadata keys {list(keys)} are not unique; examples: {dupes[:5]}"
-        )
 
 
 @register_stage("fit_vocabulary_indices", is_metadata=True)
 def fit_vocabulary_indices(
     code_metadata: DataFrame,
     code_modifiers: Sequence[str] = (),
-    validate: bool = True,
     max_rows: int | None = 5_000_000,
 ) -> DataFrame:
-    """``validate=False`` skips the uniqueness check — it is an eager
-    action that forces an extra computation of the metadata lineage;
-    callers that just aggregated by exactly these keys already have
-    uniqueness by construction.
-
-    Vocab indices are a total order over the code dimension table —
+    """Vocab indices are a total order over the code dimension table —
     small by contract (it is broadcast downstream by normalization),
-    enforced by ``max_rows`` (``None`` skips the eager count). The
-    ranking uses ids.attach_dense_rank_bounded: one exchange + one
-    in-partition sort + one Arrow index pass — no WindowExec, no extra
-    driver jobs (assign_stable_ids' distributed form costs a range
-    exchange + eager pin + offsets collect, the right trade only past
-    broadcast size — measured +0.8 s on the pipeline e2e at sf0.1 for
-    a 5-row table). A table that outgrows max_rows needs
+    enforced by ``max_rows`` (``None`` lifts the bound). The ranking
+    uses ids.attach_dense_rank_bounded: one exchange + one in-partition
+    sort + one Arrow index pass — no WindowExec, no driver job at call
+    time. Duplicate ``(code, *code_modifiers)`` keys and a table past
+    ``max_rows`` both raise when the result is first computed, as a
+    Python-worker error. A table that outgrows max_rows needs
     ids.assign_stable_ids instead of a bigger limit.
     """
-    keys = [CODE, *code_modifiers]
-    lazy_max_rows = None
-    if validate:
-        # ONE job covers both checks on the happy path (validate +
-        # count separately re-ran the full metadata lineage twice);
-        # the duplicate-example fetch only runs on actual failure.
-        grouped = code_metadata.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
-        stats = grouped.agg(
-            F.sum("__n").alias("__rows"), F.max("__n").alias("__mx")
-        ).collect()[0]
-        if (stats["__mx"] or 0) > 1:
-            validate_code_metadata(code_metadata, keys)  # raises with examples
-        if max_rows is not None and (stats["__rows"] or 0) > max_rows:
-            raise ValueError(
-                f"fit_vocabulary_indices: code metadata has {stats['__rows']} rows "
-                f"(> max_rows={max_rows}); a single-partition window over "
-                "it would bottleneck. Use a distributed ranking instead."
-            )
-    else:
-        # validate=False callers (aggregation outputs: unique by
-        # construction) get the max_rows bound enforced IN-PLAN by the
-        # rank pass itself — at action time, with no eager pre-count
-        # job over the metadata lineage (round-11; that job cost a
-        # full extra materialization of the composed pipeline per
-        # call: meds_pipeline_e2e 16 -> 14 jobs/run).
-        lazy_max_rows = max_rows
     # nulls first matches the reference's nulls_last=False argsort.
-    from meds_transforms_spark.operators.ids import attach_dense_rank_bounded
-
     ranked = attach_dense_rank_bounded(
         code_metadata,
-        order_cols=keys,
+        order_cols=[CODE, *code_modifiers],
         id_name="code/vocab_index",
         start=1,
-        max_rows=lazy_max_rows,
+        max_rows=max_rows,
     )
-    # row_number() emitted INT; keep the narrower type as the schema
-    # contract (indices are bounded by max_rows anyway).
+    # keep INT as the schema contract (indices are bounded by max_rows)
     return ranked.withColumn(
         "code/vocab_index", F.col("`code/vocab_index`").cast("int")
     )

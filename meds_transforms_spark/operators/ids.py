@@ -304,18 +304,20 @@ def attach_dense_rank_bounded(
     broadcast-sized. Also no WindowExec, so no single-partition window
     warning to squint at.
 
-    Ties in ``order_cols`` get positional (partition-internal) ranks —
-    same contract as row_number; callers needing tie rejection use
-    assign_stable_ids(validate=True).
+    ``order_cols`` must be a key: the index is a pure function of the
+    data only when no two rows tie. The Arrow pass checks it for free —
+    the sort puts equal key tuples next to each other, so each row is
+    compared with the previous one (carried across batch boundaries;
+    NULLs compare equal, as in groupBy) and the first duplicate raises
+    with the column names and the tied tuple.
 
     ``max_rows`` (round-11) enforces the boundedness contract IN-PLAN:
     the Arrow pass raises as soon as the running index passes the
-    bound — at ACTION time, with no eager pre-count job (the old eager
-    guard cost one full materialization of the input lineage per call;
-    on the composed meds pipeline that was 2 jobs and ~0.5 s per run).
-    The raise still fires reliably before any unbounded work leaves
-    the operator (the single-partition sort it guards spills rather
-    than hangs on the way there).
+    bound. Both raises fire at ACTION time, with no eager pre-count or
+    groupBy job (an eager guard costs one full materialization of the
+    input lineage per call). The max_rows raise still fires before any
+    unbounded work leaves the operator (the single-partition sort it
+    guards spills rather than hangs on the way there).
     """
     from pyspark.sql import types as T
 
@@ -332,6 +334,7 @@ def attach_dense_rank_bounded(
         import pyarrow as pa
 
         off = 0
+        prev = None
         for rb in batches:
             off += rb.num_rows
             if bound is not None and off > bound:
@@ -341,6 +344,13 @@ def attach_dense_rank_bounded(
                     "would bottleneck — use a distributed ranking "
                     "(assign_stable_ids) instead."
                 )
+            for key in zip(*(rb.column(c).to_pylist() for c in order_cols)):
+                if key == prev:
+                    raise ValueError(
+                        f"attach_dense_rank_bounded({id_name}): keys "
+                        f"{order_cols} are not unique; duplicate: {key}"
+                    )
+                prev = key
             idx = pa.array(
                 range(base + off - rb.num_rows, base + off), type=pa.int64()
             )

@@ -343,7 +343,9 @@ def ivf_centroids(corpus: DataFrame, n_cells: int, corpus_id: str = "vec_id", co
     # bounded by limit(n_cells), so the one-exchange single-partition
     # Arrow index pass is strictly cheaper than a distributed ranking
     # (assign_stable_ids' eager pin + offsets collect measured ~3x on
-    # emb_semantic_dedup at sf0.1) and emits no WindowExec warning.
+    # emb_semantic_dedup at sf0.1) and emits no WindowExec warning. Its
+    # key check rejects duplicate vec_ids among the seeds, whose cell
+    # numbers would otherwise depend on row arrival order.
     # The assert keeps the frame broadcastable: centroid tables join
     # every probe, so a huge n_cells is wrong twice.
     if n_cells > 1_000_000:

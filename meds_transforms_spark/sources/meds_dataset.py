@@ -75,14 +75,24 @@ class MEDSDataset:
         """The full event table (optionally restricted to one split).
 
         Reading ``data/`` as one table with ``basePath`` keeps the
-        ``split=`` partition column available for pruning.
+        ``split=`` partition column available for pruning. The reference
+        layout ``data/{split}/{shard}.parquet`` has no partition column:
+        every shard file under ``data/`` is read, and a split is taken
+        through ``subject_splits.parquet``.
         """
         base = self.data_dir
-        df = (
-            self.spark.read.option("basePath", base)
-            .option("recursiveFileLookup", "false")
-            .parquet(base)
-        )
+        if _split_partitioned(base):
+            df = (
+                self.spark.read.option("basePath", base)
+                .option("recursiveFileLookup", "false")
+                .parquet(base)
+            )
+        else:
+            df = (
+                self.spark.read.option("recursiveFileLookup", "true")
+                .option("pathGlobFilter", "*.parquet")
+                .parquet(base)
+            )
         if "split" in df.columns and split is not None:
             df = df.filter(F.col("split") == split)  # partition-pruned scan
         elif split is not None:
@@ -247,6 +257,15 @@ def attach_order_key(df: DataFrame) -> DataFrame:
 
 def _exists(path: str) -> bool:
     return os.path.exists(path)
+
+
+def _split_partitioned(data_dir: str) -> bool:
+    """True unless ``data_dir`` is a local directory with no ``split=``
+    subdirectory (a path this process cannot list keeps the partitioned
+    read)."""
+    if not os.path.isdir(data_dir):
+        return True
+    return any(name.startswith("split=") for name in os.listdir(data_dir))
 
 
 def merge_meds_datasets(

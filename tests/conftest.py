@@ -47,6 +47,22 @@ def ts(s: str) -> dt.datetime:
     return dt.datetime.fromisoformat(s)
 
 
+def starts_no_jobs(spark, build):
+    """Run ``build()`` under a fresh job group, assert that it started no
+    Spark job, and return its result."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"no-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "must start no job")
+    try:
+        out = build()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out
+
+
 @pytest.fixture(scope="session")
 def meds_df(spark):
     """Small MEDS-shaped fixture modeled on the reference's

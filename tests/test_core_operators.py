@@ -221,6 +221,58 @@ def test_age_rows_dob_substring_match(spark):
     assert len(out2) == 1
 
 
+def test_time_derived_on_tz_naive_time_ignores_session_zone(spark):
+    """Tz-naive MEDS ``time`` reads as TIMESTAMP_NTZ. Under a non-UTC
+    session zone — wall clocks inside its DST gap and overlap included —
+    ages and timeline deltas equal those of the same instants given as
+    UTC TIMESTAMPs, and the new rows keep the NTZ type."""
+    import datetime as dt
+
+    from pyspark.sql import types as T
+
+    from meds_transforms_spark.functions.time_units import normalize_time_unit
+    from meds_transforms_spark.operators.add_time_derived import (
+        add_time_derived_measurements,
+    )
+    from meds_transforms_spark.schema import MEDS_DATA_SCHEMA
+
+    wall = [
+        (1, dt.datetime(1980, 1, 1), "MEDS_BIRTH"),
+        (1, dt.datetime(2021, 3, 14, 2, 30, 0, 500_000), "HR"),  # New York DST gap
+        (1, dt.datetime(2021, 11, 7, 1, 30), "HR"),  # New York DST overlap
+        (2, dt.datetime(1901, 6, 1, 12), "MEDS_BIRTH"),
+        (2, dt.datetime(1950, 1, 1, 0, 0, 0, 1), "TEMP"),
+    ]
+
+    def frame(time_type, tz):
+        fields = [
+            T.StructField(f.name, time_type, True) if f.name == "time" else f
+            for f in MEDS_DATA_SCHEMA.fields
+        ]
+        rows = [(s, t.replace(tzinfo=tz), c, None, None) for s, t, c in wall]
+        return spark.createDataFrame(rows, T.StructType(fields))
+
+    def derived(df):
+        out = add_time_derived_measurements(
+            df, age={"age_unit": "years"}, timeline_tokens={"time_unit": "d"}
+        ).filter(F.col("numeric_value").isNotNull())
+        return out, sorted((r.code, r.numeric_value) for r in out.collect())
+
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        ntz_out, ntz = derived(frame(T.TimestampNTZType(), None))
+        _, utc = derived(frame(T.TimestampType(), dt.timezone.utc))
+    finally:
+        spark.conf.set(key, old)
+    assert ntz_out.schema["time"].dataType == T.TimestampNTZType()
+    assert len(ntz) == 6 and ntz == utc  # 3 ages, 3 deltas
+    year = dt.timedelta(seconds=normalize_time_unit("years"))
+    gap_age = (wall[1][1] - wall[0][1]) / year
+    assert any(c == "AGE" and math.isclose(v, gap_age, rel_tol=1e-7) for c, v in ntz)
+
+
 def test_occlude_nulls_value_when_stats_missing(spark):
     """Reference parity: a code absent from the metadata (NULL flag)
     gets its numeric_value NULLED (pl.when().then() takes the null

@@ -48,7 +48,7 @@ def test_normalization_chain_on_empty(spark, empty_meds):
         empty_meds, aggregations=["values/n_occurrences", "values/sum", "values/sum_sqd"]
     )
     assert occlude_outliers(empty_meds, meta).count() == 0
-    vocab = fit_vocabulary_indices(meta, validate=False)
+    vocab = fit_vocabulary_indices(meta)
     assert normalization(empty_meds, vocab).count() == 0
 
 

@@ -5,6 +5,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import starts_no_jobs
+
 
 def test_dense_and_order_correct(spark):
     from meds_transforms_spark.operators.ids import assign_stable_ids
@@ -135,18 +137,66 @@ def test_dense_rank_bounded_max_rows_guard_is_lazy(spark):
         bad.write.format("noop").mode("overwrite").save()
 
 
-def test_fit_vocab_max_rows_guard_on_novalidate_path(spark):
-    """fit_vocabulary_indices(validate=False) no longer pays an eager
-    stats job, but the max_rows bound still raises — at action time,
+def test_fit_vocab_max_rows_guard_is_lazy(spark):
+    """fit_vocabulary_indices pays no eager job for its max_rows bound:
+    building the frame runs nothing, and the raise fires at action time
     via the in-plan rank guard."""
     from meds_transforms_spark.operators.fit_vocabulary_indices import (
         fit_vocabulary_indices,
     )
 
     meta = spark.range(10).select(F.col("id").cast("string").alias("code"))
-    out = fit_vocabulary_indices(meta, validate=False, max_rows=5)
+    out = starts_no_jobs(spark, lambda: fit_vocabulary_indices(meta, max_rows=5))
     with pytest.raises(Exception, match="max_rows=5"):
         out.collect()
-    # validate=True keeps the eager, call-time raise
-    with pytest.raises(ValueError, match="max_rows=5"):
-        fit_vocabulary_indices(meta, validate=True, max_rows=5)
+
+
+def test_dense_rank_bounded_rejects_ties(spark):
+    """Tied key tuples would get arrival-order ranks, so the rank pass
+    rejects them: NULLs compare equal, and a tie split across two Arrow
+    batches is still caught."""
+    from meds_transforms_spark.operators.ids import attach_dense_rank_bounded
+
+    schema = "a string, b long"
+    distinct = [(None, 1), (None, 2), ("x", None), ("x", 1), (None, None)]
+    ok = attach_dense_rank_bounded(spark.createDataFrame(distinct, schema), ["a", "b"], "i")
+    assert [r.i for r in ok.collect()] == list(range(5))
+
+    for dup in [(None, None), (None, 2), ("x", 1)]:
+        bad = attach_dense_rank_bounded(
+            spark.createDataFrame(distinct + [dup], schema), ["a", "b"], "i"
+        )
+        with pytest.raises(Exception, match=r"not unique; duplicate: \(" + repr(dup[0])):
+            bad.collect()
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        # sorted: 0, 1 | 1, 2 — the tie straddles the batch boundary
+        df = spark.createDataFrame([(0,), (1,), (1,), (2,)], "k long")
+        with pytest.raises(Exception, match=r"duplicate: \(1,\)"):
+            attach_dense_rank_bounded(df, ["k"], "i").collect()
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_fit_vocab_rejects_duplicate_keys_at_action_time(spark):
+    """Duplicate (code, *code_modifiers) keys raise when the vocabulary
+    is computed; building it starts no job."""
+    from meds_transforms_spark.operators.fit_vocabulary_indices import (
+        fit_vocabulary_indices,
+    )
+
+    meta = spark.createDataFrame(
+        [("HR", "a"), ("HR", "b"), ("TEMP", None), ("TEMP", None)],
+        "code string, unit string",
+    )
+    by_code = starts_no_jobs(spark, lambda: fit_vocabulary_indices(meta))
+    with pytest.raises(Exception, match=r"\['code'\] are not unique; duplicate: \('HR',\)"):
+        by_code.collect()
+    by_pair = fit_vocabulary_indices(meta, code_modifiers=["unit"])
+    with pytest.raises(Exception, match=r"duplicate: \('TEMP', None\)"):
+        by_pair.collect()
+    unique = fit_vocabulary_indices(meta.dropDuplicates(), code_modifiers=["unit"])
+    assert sorted(r["code/vocab_index"] for r in unique.collect()) == [1, 2, 3]

@@ -5,6 +5,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import starts_no_jobs
+
 
 def test_meds_dataset_roundtrip_and_split_pruning(spark, meds_df, tmp_path):
     from meds_transforms_spark.operators.reshard_to_split import reshard_to_split
@@ -26,6 +28,71 @@ def test_meds_dataset_roundtrip_and_split_pruning(spark, meds_df, tmp_path):
     assert train.count() > 0
     assert "PartitionFilters" in plan
     assert ds.dataset_metadata()["dataset_name"] == "t"
+
+
+def test_meds_dataset_reads_reference_layout(spark, tmp_path):
+    """The MEDS reference layout data/{split}/{shard}.parquet reads as
+    the same table as the split= layout — whole, and per split through
+    subject_splits.parquet — while the split= read keeps its
+    partition-pruned scan."""
+    import datetime as dt
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from meds_transforms_spark.sources.meds_dataset import MEDSDataset
+
+    splits = {1: "train", 2: "train", 3: "train", 4: "tuning", 5: "held_out"}
+    rows = [
+        (s, t, c, v)
+        for s in splits
+        for t, c, v in [
+            (None, "EYE_COLOR//BLUE", None),
+            (dt.datetime(2020, 1, s), "HR", 60.0 + s),
+            (dt.datetime(2020, 2, s), "TEMP", None),
+        ]
+    ]
+    schema = pa.schema(
+        [
+            ("subject_id", pa.int64()),
+            ("time", pa.timestamp("us")),
+            ("code", pa.string()),
+            ("numeric_value", pa.float32()),
+        ]
+    )
+    for layout, sub in [("partitioned", "split={}"), ("reference", "{}")]:
+        root = tmp_path / layout
+        for split in set(splits.values()):
+            d = root / "data" / sub.format(split)
+            os.makedirs(d)
+            for i in range(2):  # two shards, subjects kept whole
+                shard = [
+                    dict(zip(schema.names, r))
+                    for r in rows
+                    if splits[r[0]] == split and r[0] % 2 == i
+                ]
+                pq.write_table(pa.Table.from_pylist(shard, schema=schema), d / f"{i}.parquet")
+        ds = MEDSDataset(spark, str(root))
+        ds.write_subject_splits(
+            spark.createDataFrame(list(splits.items()), "subject_id long, split string")
+        )
+
+    partitioned = MEDSDataset(spark, str(tmp_path / "partitioned"))
+    reference = MEDSDataset(spark, str(tmp_path / "reference"))
+    cols = ["subject_id", "time", "code", "numeric_value"]
+
+    def got(df):
+        return sorted(df.select(cols).collect(), key=lambda r: (r[0], str(r[1]), r[2]))
+
+    assert got(reference.data()) == got(partitioned.data())
+    assert len(got(reference.data())) == len(rows)
+    train = partitioned.data(split="train")
+    assert got(reference.data(split="train")) == got(train)
+    assert {r.subject_id for r in got(train)} == {1, 2, 3}
+    assert "PartitionFilters: [isnotnull(split" in (
+        train._jdf.queryExecution().executedPlan().toString()
+    )
 
 
 def test_shards_json_roundtrip(spark, meds_df, tmp_path):
@@ -394,6 +461,42 @@ def test_pipeline_metrics_empty_without_checkpoint(spark, meds_df):
     p = Pipeline(spark, cfg)
     p.run(meds_df)
     assert p.last_run_metrics == []
+
+
+def test_pipeline_run_is_lazy(spark, meds_df, tmp_path):
+    """Pipeline.run over the shipped normalize.yaml only builds plans:
+    no stage (the vocabulary's key and size checks included) starts a
+    Spark job before the caller's first action."""
+    from meds_transforms_spark.plans import Pipeline, PipelineConfig
+
+    cfg = PipelineConfig.from_yaml("pkg://meds_transforms_spark.pipelines.normalize.yaml")
+    data, meta = starts_no_jobs(spark, lambda: Pipeline(spark, cfg).run(meds_df))
+    # the check does see jobs: the write's
+    with pytest.raises(AssertionError):
+        starts_no_jobs(spark, lambda: data.write.parquet(str(tmp_path / "out")))
+    assert meta.select("code/vocab_index").count() > 0
+
+
+def test_pipeline_rejects_duplicate_vocab_keys_on_write(spark, meds_df, tmp_path):
+    """Duplicate code-metadata keys still raise through Pipeline.run —
+    when the normalized data is written, not when the plan is built."""
+    from meds_transforms_spark.plans import Pipeline, PipelineConfig
+
+    cfg = PipelineConfig.from_yaml(
+        """
+stages:
+  - fit_vocabulary_indices: {}
+  - normalization: {}
+"""
+    )
+    meta = spark.createDataFrame(
+        [("HR", 3, 10.0, 40.0), ("HR", 1, 1.0, 1.0), ("TEMP", 2, 4.0, 10.0)],
+        "code string, `values/n_occurrences` long, `values/sum` double, "
+        "`values/sum_sqd` double",
+    )
+    data, _ = Pipeline(spark, cfg).run(meds_df, code_metadata=meta)
+    with pytest.raises(Exception, match=r"not unique; duplicate: \('HR',\)"):
+        data.write.parquet(str(tmp_path / "out"))
 
 
 def test_yaml_pipeline_with_corpus_stages(spark):
