@@ -57,7 +57,8 @@ def _cmd_run(args) -> int:
         # reference-tooling interop; the dataset itself is already
         # complete and valid here, so the shards-json subject cap must
         # not fail the whole run — warn and skip (split membership
-        # lives in the parquet split column regardless)
+        # lives in subject_splits.parquet regardless, and in the split=
+        # partitions of output from split-partitioned input)
         try:
             dst.write_shards_json(splits)
         except ValueError as e:

@@ -308,8 +308,9 @@ def attach_dense_rank_bounded(
     data only when no two rows tie. The Arrow pass checks it for free —
     the sort puts equal key tuples next to each other, so each row is
     compared with the previous one (carried across batch boundaries;
-    NULLs compare equal, as in groupBy) and the first duplicate raises
-    with the column names and the tied tuple.
+    NULLs compare equal, and so do NaNs in float keys, as in groupBy)
+    and the first duplicate raises with the column names and the tied
+    tuple.
 
     ``max_rows`` (round-11) enforces the boundedness contract IN-PLAN:
     the Arrow pass raises as soon as the running index passes the
@@ -333,6 +334,16 @@ def attach_dense_rank_bounded(
     def attach(batches):
         import pyarrow as pa
 
+        # groupBy treats NaN as one value, so NaN keys must compare equal
+        # too; one shared stand-in does it (tuple == checks identity first)
+        nan = object()
+
+        def key_values(col):
+            vals = col.to_pylist()
+            if pa.types.is_floating(col.type):
+                return [nan if v != v else v for v in vals]
+            return vals
+
         off = 0
         prev = None
         for rb in batches:
@@ -344,11 +355,12 @@ def attach_dense_rank_bounded(
                     "would bottleneck — use a distributed ranking "
                     "(assign_stable_ids) instead."
                 )
-            for key in zip(*(rb.column(c).to_pylist() for c in order_cols)):
+            for key in zip(*(key_values(rb.column(c)) for c in order_cols)):
                 if key == prev:
+                    shown = tuple(float("nan") if v is nan else v for v in key)
                     raise ValueError(
                         f"attach_dense_rank_bounded({id_name}): keys "
-                        f"{order_cols} are not unique; duplicate: {key}"
+                        f"{order_cols} are not unique; duplicate: {shown}"
                     )
                 prev = key
             idx = pa.array(

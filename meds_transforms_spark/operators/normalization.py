@@ -78,11 +78,14 @@ def normalization(
 
     # The reference's normalization emits ONLY the tokenization-ready
     # core schema (its golden outputs drop upstream extras like
-    # numeric_value/is_inlier); keep subject/time (+order key) only.
+    # numeric_value/is_inlier); keep subject/time (+order key) only, and
+    # the split column when there is one: it is the dataset's layout
+    # (write_data partitions by it), not an event attribute.
     from meds_transforms_spark.schema import ORDER_KEY, SUBJECT_ID, TIME
 
     keep = [c for c in (SUBJECT_ID, TIME, ORDER_KEY) if c in df.columns]
     passthrough = [dcol(c) for c in keep]
+    split = [dcol("split")] if "split" in df.columns else []
     v = dcol(NUMERIC_VALUE)
     diff = v - scol("__mean")
     # std == 0 mirrors the reference's unguarded (v-mean)/std, which in
@@ -103,4 +106,5 @@ def normalization(
         *passthrough,
         scol("__vocab").cast("long").alias(CODE),
         normed.cast("float").alias(NUMERIC_VALUE),
+        *split,
     )

@@ -15,6 +15,11 @@ runner.py:291-370) without its process/Hydra machinery:
   the reference's ``.done``-file resume (runner.py:330-369). Checkpoints
   keep the "data is the interface" debuggability without forcing every
   stage to disk when disabled.
+- A metadata stage's output is computed once at its boundary, as the
+  reference's ``codes.parquet`` is: on disk with checkpointing, pinned
+  in the block manager (``localCheckpoint``) without it. ``run``
+  therefore fits the metadata plane (its shuffle stages run at call
+  time); the data plane stays lazy until the caller's first action.
 
 No subprocesses, no file locks, no worker polling — the Spark scheduler
 owns parallelism.
@@ -196,6 +201,14 @@ class Pipeline:
         subject, so the id set stays valid after row-filtering stages).
         With no split information at all, the full frame is used —
         that's the single-split dataset case, not a leak.
+
+        Jobs: each metadata stage's codes table is pinned where it is
+        produced (see :meth:`_checkpoint`), so ``run`` starts the shuffle
+        stages of the metadata plane (5 jobs over ``normalize.yaml``) and
+        every consumer — broadcasts, vocabulary rank, metadata write —
+        reads that one copy. The data frame stays a lazy plan. A pinned
+        plan's final stage also stays lazy, so the vocabulary's
+        duplicate-key and ``max_rows`` errors surface at the first action.
         """
         import inspect
 
@@ -278,7 +291,8 @@ class Pipeline:
         self, df: DataFrame, idx: int, name: str, is_metadata: bool
     ) -> DataFrame:
         if not self.checkpoint_dir:
-            return df
+            # a codes table is read by several consumers; a data frame once
+            return df.localCheckpoint(eager=False) if is_metadata else df
         path = os.path.join(self.checkpoint_dir, f"{idx:02d}_{name}")
         write_parquet(df, path)
         self._record_metrics(path, idx, name, is_metadata, False)
@@ -330,8 +344,16 @@ def canonical_sort(df: DataFrame, global_order: bool = False) -> DataFrame:
     rows contiguous and ordered — what every consumer actually needs).
     ``global_order=True`` range-partitions by subject first so files are
     globally ordered across partitions too (costlier: sampling pass +
-    range exchange)."""
+    range exchange).
+
+    A ``split`` column leads the sort: a subject sits in one split, so
+    each split's rows keep the contract, and a write partitioned by
+    split (``MEDSDataset.write_data``) finds its required order already
+    met. Otherwise Spark's write adds its own sort on ``split`` and the
+    optimizer drops this one as redundant, leaving the files unordered."""
     cols = [F.col(SUBJECT_ID), F.col(TIME).asc_nulls_first()]
+    if "split" in df.columns:
+        cols.insert(0, F.col("split"))
     if ORDER_KEY in df.columns:
         cols.append(F.col(ORDER_KEY))
     part = (

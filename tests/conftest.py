@@ -47,19 +47,28 @@ def ts(s: str) -> dt.datetime:
     return dt.datetime.fromisoformat(s)
 
 
-def starts_no_jobs(spark, build):
-    """Run ``build()`` under a fresh job group, assert that it started no
-    Spark job, and return its result."""
+def jobs_started(spark, build):
+    """Run ``build()`` under a fresh job group; return its result and the
+    ids of the Spark jobs it started."""
     import uuid
 
     sc = spark.sparkContext
-    group = f"no-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "must start no job")
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
     try:
         out = build()
-        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # job-start events reach the status tracker through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def starts_no_jobs(spark, build):
+    """Run ``build()``, assert that it started no Spark job, and return
+    its result."""
+    out, jobs = jobs_started(spark, build)
+    assert jobs == []
     return out
 
 

@@ -169,6 +169,14 @@ def test_dense_rank_bounded_rejects_ties(spark):
         with pytest.raises(Exception, match=r"not unique; duplicate: \(" + repr(dup[0])):
             bad.collect()
 
+    # NaN keys tie as in groupBy; a single NaN is an ordinary key
+    nan = float("nan")
+    ok = attach_dense_rank_bounded(spark.createDataFrame([(nan,), (1.0,)], "k double"), ["k"], "i")
+    assert [r.i for r in ok.collect()] == [0, 1]
+    bad = spark.createDataFrame([(nan,), (nan,), (1.0,)], "k double")
+    with pytest.raises(Exception, match=r"duplicate: \(nan,\)"):
+        attach_dense_rank_bounded(bad, ["k"], "i").collect()
+
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
     spark.conf.set(key, "2")

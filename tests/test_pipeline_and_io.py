@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import starts_no_jobs
+from tests.conftest import jobs_started
 
 
 def test_meds_dataset_roundtrip_and_split_pruning(spark, meds_df, tmp_path):
@@ -463,18 +463,75 @@ def test_pipeline_metrics_empty_without_checkpoint(spark, meds_df):
     assert p.last_run_metrics == []
 
 
-def test_pipeline_run_is_lazy(spark, meds_df, tmp_path):
-    """Pipeline.run over the shipped normalize.yaml only builds plans:
-    no stage (the vocabulary's key and size checks included) starts a
-    Spark job before the caller's first action."""
+def test_pipeline_fits_metadata_plane_once(spark, meds_df, tmp_path):
+    """Pipeline.run over the shipped normalize.yaml computes each
+    metadata stage's codes table once: after the data write, writing the
+    code metadata reads that pinned table instead of rebuilding its
+    lineage (event scan, subject window, code aggregate, vocabulary
+    rank)."""
     from meds_transforms_spark.plans import Pipeline, PipelineConfig
+    from meds_transforms_spark.sources.meds_dataset import MEDSDataset
 
     cfg = PipelineConfig.from_yaml("pkg://meds_transforms_spark.pipelines.normalize.yaml")
-    data, meta = starts_no_jobs(spark, lambda: Pipeline(spark, cfg).run(meds_df))
-    # the check does see jobs: the write's
-    with pytest.raises(AssertionError):
-        starts_no_jobs(spark, lambda: data.write.parquet(str(tmp_path / "out")))
-    assert meta.select("code/vocab_index").count() > 0
+    data, meta = Pipeline(spark, cfg).run(meds_df)
+    data.write.parquet(str(tmp_path / "data"))
+    out = MEDSDataset(spark, str(tmp_path / "out"))
+    _, jobs = jobs_started(spark, lambda: out.write_code_metadata(meta))
+    assert 0 < len(jobs) <= 2, jobs
+    assert out.code_metadata().count() == meta.count() > 0
+
+
+def test_pipeline_keeps_split_layout_through_normalization(spark, meds_df, tmp_path):
+    """normalize.yaml over a split-partitioned dataset (no
+    subject_splits.parquet) writes split-partitioned output: each
+    subject stays readable under its own split."""
+    from meds_transforms_spark.plans import Pipeline, PipelineConfig
+    from meds_transforms_spark.plans.pipeline import canonical_sort
+    from meds_transforms_spark.sources.meds_dataset import MEDSDataset
+
+    splits = {1: "train", 2: "train", 3: "held_out"}
+    split_of = F.create_map(*[F.lit(x) for kv in splits.items() for x in kv])
+    src = MEDSDataset(spark, str(tmp_path / "in"))
+    src.write_data(meds_df.withColumn("split", split_of[F.col("subject_id")]))
+
+    cfg = PipelineConfig.from_yaml("pkg://meds_transforms_spark.pipelines.normalize.yaml")
+    data, _ = Pipeline(spark, cfg).run(src.data())
+    out = MEDSDataset(spark, str(tmp_path / "out"))
+    out.write_data(canonical_sort(data))
+
+    for split in ("train", "held_out"):
+        got = {r.subject_id for r in out.data(split=split).select("subject_id").distinct().collect()}
+        assert got == {s for s, sp in splits.items() if sp == split}
+
+
+def test_canonical_sort_survives_split_partitioned_write(spark, tmp_path):
+    """Each file of a split-partitioned write is in canonical order, even
+    when rows reach the sort out of order (Spark's partitioned write adds
+    a sort on split, which must not replace the canonical one)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from meds_transforms_spark.plans.pipeline import canonical_sort
+    from meds_transforms_spark.sources.meds_dataset import MEDSDataset
+
+    sid = F.col("id") % 50
+    df = spark.range(2000).select(
+        sid.alias("subject_id"),
+        F.timestamp_seconds((F.col("id") * 7919) % 100_000).alias("time"),
+        F.lit("HR").alias("code"),
+        F.lit(None).cast("float").alias("numeric_value"),
+        F.when(sid % 3 == 0, "train").otherwise("held_out").alias("split"),
+    )
+    out = MEDSDataset(spark, str(tmp_path / "out"))
+    out.write_data(canonical_sort(df))
+
+    files = glob.glob(str(tmp_path / "out" / "data" / "split=*" / "*.parquet"))
+    assert files
+    for f in files:
+        t = pq.read_table(f, columns=["subject_id", "time"])
+        s, tm = t.column("subject_id").to_numpy(), t.column("time").cast("int64").to_numpy()
+        assert not ((s[1:] < s[:-1]) | ((s[1:] == s[:-1]) & (tm[1:] < tm[:-1]))).any(), f
 
 
 def test_pipeline_rejects_duplicate_vocab_keys_on_write(spark, meds_df, tmp_path):
