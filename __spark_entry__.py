@@ -60,7 +60,6 @@ def _stats_meta(spark, sf_dir):
             "values/sum_sqd",
         ],
         sum_decimal_scale=6,
-        strategy="two_level",
     )
 
 
@@ -95,7 +94,6 @@ def q_meds_agg_code_metadata(spark, sf_dir):
             "values/max",
         ],
         sum_decimal_scale=6,
-        strategy="two_level",  # avoids the distinct-count expand (SCALING.md)
     )
     return out
 

@@ -158,23 +158,23 @@ def aggregate_code_metadata(
     do_summarize_over_all_codes: bool = False,
     quantiles: Sequence[float] = DEFAULT_QUANTILES,
     sum_decimal_scale: int | None = None,
-    strategy: str = "expand",
 ) -> DataFrame:
     """One-shot grouped aggregation; returns the code-metadata delta.
 
     Plan shape at scale: single shuffle on (code, *modifiers) with
-    map-side partial aggregation; countDistinct triggers Spark's expand +
-    two-phase distinct aggregation, still one logical pass. Skewed codes
-    (a handful of ultra-common labs) are handled by AQE skew splitting.
+    map-side partial aggregation. With exactly one exact distinct count
+    (the usual ``code/n_subjects`` request) Spark rewrites the aggregate
+    into a (keys, subject) → (keys) two-level plan with no expand; two
+    distinct counts still plan an expand, still one logical pass. Skewed
+    codes (a handful of ultra-common labs) are handled by AQE skew
+    splitting.
 
-    ``strategy="two_level"`` replaces the distinct-count expand (which
-    shuffles ~3× the row count when two distinct aggregates are present)
-    with a pre-aggregation on (keys, subject_id): shuffle 1 carries one
-    partial row per (code, subject) — map-side combined — and shuffle 2
-    is |codes|·|subjects| → |codes|, tiny. Wins whenever rows ≫
-    distinct (code, subject) pairs, i.e. always for longitudinal data.
-    Not available with quantiles or a grand-total rollup (raw values /
-    regrouping needed)."""
+    This aggregate owns the codes table's uniqueness: one row per
+    (code, *modifiers), plus the null-key grand total under
+    ``do_summarize_over_all_codes``. Consumers rely on it and do not
+    re-deduplicate. It does not own order: the output is unsorted, and
+    ``fit_vocabulary_indices``'s rank pass is the one place that orders
+    codes (the pipeline's written codes table comes out of it)."""
     keys = [CODE, *code_modifiers]
     guarded = df.withColumn(
         "__val",
@@ -183,13 +183,6 @@ def aggregate_code_metadata(
             F.col(NUMERIC_VALUE),
         ),
     )
-    if strategy == "two_level":
-        names = [a if isinstance(a, str) else a.get("name") for a in aggregations]
-        if "values/quantiles" in names or do_summarize_over_all_codes:
-            raise ValueError(
-                "two_level strategy does not support quantiles or the grand-total rollup"
-            )
-        return _two_level_agg(guarded, keys, names, sum_decimal_scale)
     exprs = _agg_exprs(aggregations, quantiles, sum_decimal_scale)
     if do_summarize_over_all_codes:
         # rollup(code, mods) emits per-key rows + the null-key grand total
@@ -208,55 +201,7 @@ def aggregate_code_metadata(
             out = out.filter(all_grouped | all_total)
     else:
         out = guarded.groupBy(*keys).agg(*exprs)
-    return out.orderBy(*[F.col(k).asc_nulls_first() for k in keys])
-
-
-def _two_level_agg(guarded: DataFrame, keys, names, sum_decimal_scale):
-    """(keys, subject) pre-aggregation → final (keys) aggregation.
-
-    Every supported statistic is decomposable over the subject split:
-    counts/sums add, min/min and max/max compose, and the two distinct-
-    subject counts become plain COUNTs of pre-aggregated rows.
-    """
-    val = F.col("__val")
-    scale = sum_decimal_scale
-    sum_t = f"decimal(30,{scale})" if scale is not None else "double"
-    sq_t = f"decimal(38,{scale + 2})" if scale is not None else "double"
-    partial = guarded.groupBy(*keys, SUBJECT_ID).agg(
-        F.count(F.lit(1)).alias("__p_rows"),
-        F.count(val).alias("__p_vals"),
-        F.count(F.when(val == F.round(val), F.lit(1))).alias("__p_ints"),
-        F.sum(val.cast(sum_t)).alias("__p_sum"),
-        F.sum((val * val).cast(sq_t)).alias("__p_sum_sqd"),
-        F.min(val).alias("__p_min"),
-        F.max(val).alias("__p_max"),
-    )
-    final_exprs = {
-        "code/n_subjects": F.count(F.lit(1)),
-        "code/n_occurrences": F.sum("__p_rows"),
-        "values/n_subjects": F.count(F.when(F.col("__p_vals") > 0, F.lit(1))),
-        "values/n_occurrences": F.sum("__p_vals"),
-        "values/n_ints": F.sum("__p_ints"),
-        "values/sum": F.coalesce(
-            F.sum("__p_sum").cast("double") if scale is not None else F.sum("__p_sum"),
-            F.lit(0.0),
-        ),
-        "values/sum_sqd": F.coalesce(
-            F.sum("__p_sum_sqd").cast("double")
-            if scale is not None
-            else F.sum("__p_sum_sqd"),
-            F.lit(0.0),
-        ),
-        "values/min": F.min("__p_min"),
-        "values/max": F.max("__p_max"),
-    }
-    unknown = [n for n in names if n not in final_exprs]
-    if unknown:
-        raise ValueError(f"Unknown aggregations for two_level: {unknown}")
-    out = partial.groupBy(*keys).agg(
-        *[final_exprs[n].alias(n) for n in names]
-    )
-    return out.orderBy(*[F.col(k).asc_nulls_first() for k in keys])
+    return out
 
 
 def join_and_replace(new: DataFrame, old: DataFrame | None, keys: Sequence[str]) -> DataFrame:

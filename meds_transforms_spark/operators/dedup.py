@@ -34,51 +34,10 @@ mixing, so durable indexes are safe either way.
 
 from __future__ import annotations
 
-import warnings
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from meds_transforms_spark.operators.base import register_stage
-
-
-class _DefaultHashFn(str):
-    """``str`` subclass marking a ``hash_fn`` value the CALLER DID NOT
-    PASS (the signature default). Compares/hashes exactly like the
-    plain string, so every routing comparison is unaffected; only
-    :func:`_note_default_hash_fn`'s isinstance check sees the
-    difference. (An interned-literal identity check would misfire:
-    CPython interns ``"poly64"``, so a user's explicit literal would
-    be the same object as a plain-str module default.)"""
-
-    __slots__ = ()
-
-
-POLY64_DEFAULT = _DefaultHashFn("poly64")
-_default_hash_fn_warned = False
-
-
-def _note_default_hash_fn(hash_fn: str) -> None:
-    """One-shot per-session behavior-change notice (CHANGELOG, round
-    8): entry points taking the DEFAULT ``hash_fn`` now route to the
-    Arrow ``poly64`` kernel — different buckets (and thus different
-    surviving duplicates) than the pre-round-8 ``xxhash64`` default,
-    and the plan requires Python workers + pyarrow. Suppressed when
-    any ``hash_fn`` (even ``"poly64"``) is passed explicitly."""
-    global _default_hash_fn_warned
-    if _default_hash_fn_warned or not isinstance(hash_fn, _DefaultHashFn):
-        return
-    _default_hash_fn_warned = True
-    warnings.warn(
-        "meds_transforms_spark dedup/winnow default hash_fn is now the "
-        "Arrow-batched 'poly64' kernel (since round 8): bucket values — "
-        "and which duplicate of a pair survives — differ from the old "
-        "'xxhash64' default, and the default plan requires Python "
-        "workers + pyarrow. Pass hash_fn='poly64' to silence this "
-        "notice, or hash_fn='xxhash64' for the pre-round-8 JVM-only "
-        "behavior. See CHANGELOG.md.",
-        stacklevel=3,
-    )
 
 
 def _normalized(col: Column) -> Column:
@@ -189,7 +148,7 @@ def lsh_band_buckets(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 5,
-    hash_fn: str = POLY64_DEFAULT,
+    hash_fn: str = "poly64",
     rescue_starved: bool = True,
 ) -> DataFrame:
     """(id, band-bucket hash) pairs via one-permutation MinHash — the
@@ -226,7 +185,6 @@ def lsh_band_buckets(
     rows_per_band = num_hashes // bands
     if rows_per_band * bands != num_hashes:
         raise ValueError("num_hashes must be divisible by bands")
-    _note_default_hash_fn(hash_fn)
     if hash_fn == "poly64":
         from meds_transforms_spark.operators.grams import lsh_band_buckets_poly
 
@@ -358,7 +316,7 @@ def minhash_lsh_dedup(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 5,
-    hash_fn: str = POLY64_DEFAULT,
+    hash_fn: str = "poly64",
     rescue_starved: bool = True,
 ) -> DataFrame:
     """Near-dedup: docs sharing any LSH band bucket collapse to the

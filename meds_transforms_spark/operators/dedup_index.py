@@ -38,14 +38,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meds_transforms_spark.operators.base import register_stage
-from meds_transforms_spark.operators.dedup import POLY64_DEFAULT, lsh_band_buckets
+from meds_transforms_spark.operators.dedup import lsh_band_buckets
 
-# hash_fn defaults to the sentinel-marked poly64 so the one-shot
-# behavior-change notice (dedup._note_default_hash_fn) fires for index
-# builders that never chose a hash; an explicit hash_fn kwarg replaces
-# it with a plain str and stays silent. Serialization is unaffected
-# (the sentinel json-encodes as the string "poly64").
-_DEFAULT_PARAMS = dict(num_hashes=32, bands=8, shingle_k=5, hash_fn=POLY64_DEFAULT)
+_DEFAULT_PARAMS = dict(num_hashes=32, bands=8, shingle_k=5, hash_fn="poly64")
 
 
 def build_minhash_index(

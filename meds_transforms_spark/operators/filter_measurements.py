@@ -43,7 +43,7 @@ def filter_measurements(
         allowed = allowed.filter(
             F.col("code/n_occurrences") >= int(min_occurrences_per_code)
         )
-    allowed = allowed.select(*keys).dropDuplicates(keys)
+    allowed = allowed.select(*keys)
     if all(t is None for t in (min_subjects_per_code, min_occurrences_per_code)):
         return df
     return df.join(F.broadcast(allowed), on=keys, how="left_semi")

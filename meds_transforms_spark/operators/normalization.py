@@ -54,7 +54,7 @@ def normalization(
         F.col("code/vocab_index").alias("__vocab"),
         mean.alias("__mean"),
         std.alias("__std"),
-    ).dropDuplicates(keys)
+    )
 
     # Null-safe equi-join: nullable modifier keys must match null-to-null
     # (nulls_equal=True at normalization.py:214). Spark's `on=[cols]`

@@ -56,8 +56,6 @@ def occlude_outliers(
             mean.alias("__mean"),
             F.sqrt(F.greatest(var, F.lit(0.0))).alias("__std"),
         )
-    stats = stats.dropDuplicates(keys)
-
     joined = df.join(F.broadcast(stats), on=keys, how="left")
     v = F.col(NUMERIC_VALUE)
     is_inlier = F.when(

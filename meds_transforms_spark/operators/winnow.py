@@ -37,12 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 from meds_transforms_spark.operators.base import register_stage
-from meds_transforms_spark.operators.dedup import (
-    POLY64_DEFAULT,
-    _h64,
-    _normalized,
-    _note_default_hash_fn,
-)
+from meds_transforms_spark.operators.dedup import _h64, _normalized
 
 
 def _apply_max_df(fps: DataFrame, max_df: int | None) -> DataFrame:
@@ -83,7 +78,7 @@ def winnow_fingerprints(
     w: int = 4,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = POLY64_DEFAULT,
+    hash_fn: str = "poly64",
     rescue_starved: bool = True,
 ) -> DataFrame:
     """Distinct winnowed fingerprints: one ``(id_col, fp)`` row per
@@ -103,7 +98,6 @@ def winnow_fingerprints(
     """
     if k < 1 or w < 1:
         raise ValueError("winnow_fingerprints: k and w must be >= 1")
-    _note_default_hash_fn(hash_fn)
     if hash_fn == "poly64":
         from meds_transforms_spark.operators.grams import winnow_fingerprints_poly
 
@@ -169,7 +163,7 @@ def winnow_overlap(
     max_df: int | None = 1000,
     text_col: str = "text",
     id_col: str = "doc_id",
-    hash_fn: str = POLY64_DEFAULT,
+    hash_fn: str = "poly64",
     packed_ids: bool | None = None,
 ) -> DataFrame:
     """Document pairs sharing ≥ ``min_shared`` winnowed fingerprints:
@@ -305,7 +299,7 @@ def winnow_contains(
     id_col: str = "doc_id",
     probe_text_col: str | None = None,
     probe_id_col: str | None = None,
-    hash_fn: str = POLY64_DEFAULT,
+    hash_fn: str = "poly64",
     broadcast_probe: bool = True,
 ) -> DataFrame:
     """Cross-corpus passage containment: which corpus documents share

@@ -204,9 +204,9 @@ class Pipeline:
 
         Jobs: each metadata stage's codes table is pinned where it is
         produced (see :meth:`_checkpoint`), so ``run`` starts the shuffle
-        stages of the metadata plane (5 jobs over ``normalize.yaml``) and
-        every consumer — broadcasts, vocabulary rank, metadata write —
-        reads that one copy. The data frame stays a lazy plan. A pinned
+        stages of the metadata plane (3 jobs over ``normalize.yaml`` on
+        the test fixture) and every consumer — broadcasts, vocabulary
+        rank, metadata write — reads that one copy. The data frame stays a lazy plan. A pinned
         plan's final stage also stays lazy, so the vocabulary's
         duplicate-key and ``max_rows`` errors surface at the first action.
         """

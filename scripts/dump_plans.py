@@ -12,7 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 SF_DIR = "/root/testdata/sf0.01"
 
 REVIEW = {
-    "meds_agg_code_metadata": "two-level agg: (code,subject) combine then per-code finalize — no distinct expand, both shuffles carry partial rows only",
+    "meds_agg_code_metadata": "one groupBy().agg(); with its single exact distinct count (code/n_subjects) Spark's single-distinct rewrite plans (code,subject) partial aggs then a per-code finalize — no Expand, every shuffle carries partial rows only, no global sort",
     "meds_filter_subjects": "single exchange on subject_id feeding the window; filter follows, nothing else moves",
     "meds_normalization": "fact scan → two BroadcastHashJoins (stats, vocab) → projection; zero fact-table shuffles",
     "tpch_q1": "scan with shipdate pushed to parquet → partial/final hash agg on 2 keys; round-10 sums the money measures as exact fixed-point LONGS (value·10^s per row, two-long DIV/MOD-10⁹ aggregation state with map-side combine, exact decimal reassembly then one cast) — bit-identical doubles, no per-row BigDecimal adds",

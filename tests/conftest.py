@@ -13,19 +13,6 @@ from meds_transforms_spark.schema import MEDS_DATA_SCHEMA
 pytest_plugins = ["pytester", "meds_transforms_spark.pytest_plugin"]
 
 
-@pytest.fixture(autouse=True)
-def _absorb_poly64_default_notice():
-    """The one-shot round-8 hash_fn behavior-change notice fires the
-    first time ANY entry point in the process takes the default — which
-    test runs first is collection-order luck, so pre-mark it emitted to
-    keep the suite warning-clean. test_poly64_default_warns_once_per_
-    session resets the flag explicitly to exercise the real behavior."""
-    from meds_transforms_spark.operators import dedup as _dedup
-
-    _dedup._default_hash_fn_warned = True
-    yield
-
-
 @pytest.fixture(scope="session")
 def spark():
     s = (

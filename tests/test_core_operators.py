@@ -76,22 +76,6 @@ def test_aggregate_code_metadata_basic(meds_df):
     assert math.isclose(hr["values/max"], 142.0, rel_tol=1e-6)
 
 
-def test_aggregate_two_level_strategy_equal(meds_df):
-    aggs = [
-        "code/n_subjects", "code/n_occurrences", "values/n_subjects",
-        "values/n_occurrences", "values/n_ints", "values/sum",
-        "values/sum_sqd", "values/min", "values/max",
-    ]
-    a = {r["code"]: tuple(r)[1:] for r in aggregate_code_metadata(meds_df, aggregations=aggs, sum_decimal_scale=6).collect()}
-    b = {
-        r["code"]: tuple(r)[1:]
-        for r in aggregate_code_metadata(
-            meds_df, aggregations=aggs, sum_decimal_scale=6, strategy="two_level"
-        ).collect()
-    }
-    assert a == b
-
-
 def test_aggregate_quantiles_nearest(spark):
     rows = [(1, None, "X", float(v), None) for v in [1, 2, 3, 4, 100]]
     from meds_transforms_spark.schema import MEDS_DATA_SCHEMA

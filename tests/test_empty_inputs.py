@@ -26,12 +26,6 @@ def test_filter_and_aggregate_on_empty(empty_meds):
         aggregations=["code/n_subjects", "values/sum", "values/quantiles"],
     )
     assert out.count() == 0
-    two = aggregate_code_metadata(
-        empty_meds,
-        aggregations=["code/n_subjects", "values/sum"],
-        strategy="two_level",
-    )
-    assert two.count() == 0
 
 
 def test_normalization_chain_on_empty(spark, empty_meds):

@@ -389,40 +389,3 @@ def test_flat_utf8_rebases_sliced_buffers():
         assert np.array_equal(a, b)
     for a, b in zip(_word_gram_batch(sl, 5), _word_gram_batch(cp, 5)):
         assert np.array_equal(a, b)
-
-
-def test_poly64_default_warns_once_per_session(spark):
-    """CHANGELOG round 10: taking the DEFAULT hash_fn fires exactly one
-    UserWarning per session; explicit hash_fn (even 'poly64') never
-    warns."""
-    import warnings as W
-
-    from meds_transforms_spark.operators import dedup as D
-    from meds_transforms_spark.operators.winnow import winnow_fingerprints
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta")],
-        "doc_id long, text string",
-    )
-    orig = D._default_hash_fn_warned
-    try:
-        # explicit hash_fn — silent even from a fresh session state
-        D._default_hash_fn_warned = False
-        with W.catch_warnings(record=True) as rec:
-            W.simplefilter("always")
-            D.minhash_lsh_dedup(docs, hash_fn="poly64").collect()
-        assert [w for w in rec if "hash_fn" in str(w.message)] == []
-        assert not D._default_hash_fn_warned
-
-        # default — exactly one warning, across DIFFERENT entry points
-        with W.catch_warnings(record=True) as rec:
-            W.simplefilter("always")
-            D.minhash_lsh_dedup(docs).collect()
-            winnow_fingerprints(docs, k=3, w=2).collect()
-            D.lsh_band_buckets(docs).collect()
-        hits = [w for w in rec if "hash_fn" in str(w.message)]
-        assert len(hits) == 1, [str(w.message) for w in rec]
-        assert issubclass(hits[0].category, UserWarning)
-        assert D._default_hash_fn_warned
-    finally:
-        D._default_hash_fn_warned = orig

@@ -481,6 +481,24 @@ def test_pipeline_fits_metadata_plane_once(spark, meds_df, tmp_path):
     assert out.code_metadata().count() == meta.count() > 0
 
 
+def test_normalize_yaml_run_and_write_job_count(spark, meds_df, tmp_path):
+    """Pipeline.run over normalize.yaml plus the data and metadata writes
+    start 8 jobs on this fixture: the codes table is aggregated without a
+    global sort and broadcast without re-deduplication."""
+    from meds_transforms_spark.plans import Pipeline, PipelineConfig
+    from meds_transforms_spark.sources.meds_dataset import MEDSDataset
+
+    cfg = PipelineConfig.from_yaml("pkg://meds_transforms_spark.pipelines.normalize.yaml")
+    out = MEDSDataset(spark, str(tmp_path / "out"))
+    (data, meta), run_jobs = jobs_started(spark, lambda: Pipeline(spark, cfg).run(meds_df))
+    _, data_jobs = jobs_started(spark, lambda: out.write_data(data))
+    _, meta_jobs = jobs_started(spark, lambda: out.write_code_metadata(meta))
+    assert len(run_jobs) + len(data_jobs) + len(meta_jobs) <= 8, (
+        run_jobs, data_jobs, meta_jobs,
+    )
+    assert out.data().count() == data.count() > 0
+
+
 def test_pipeline_keeps_split_layout_through_normalization(spark, meds_df, tmp_path):
     """normalize.yaml over a split-partitioned dataset (no
     subject_splits.parquet) writes split-partitioned output: each

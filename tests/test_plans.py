@@ -8,6 +8,8 @@ parquet scans, and pipeline end-to-end viability.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -73,6 +75,61 @@ def test_aggregate_is_partial_final(spark, meds_df):
     # Two-phase hash aggregation (map-side partial + final) — the native
     # replacement for the reference's per-shard map / cross-shard reduce.
     assert plan.count("HashAggregate") >= 2, plan
+
+
+def test_aggregate_leaves_order_to_the_vocabulary(spark, meds_df):
+    from meds_transforms_spark.operators.aggregate_code_metadata import (
+        aggregate_code_metadata,
+    )
+
+    for kw in ({}, {"do_summarize_over_all_codes": True}):
+        plan = plan_of(
+            aggregate_code_metadata(
+                meds_df, aggregations=["code/n_subjects", "values/sum"], **kw
+            )
+        )
+        # No global sort: the vocabulary rank pass owns codes order.
+        assert "rangepartitioning" not in plan, plan
+        assert not re.search(r"\bSort \[", plan), plan
+
+
+def test_aggregate_without_distinct_is_one_shuffle(spark, meds_df):
+    from meds_transforms_spark.operators.aggregate_code_metadata import (
+        aggregate_code_metadata,
+    )
+
+    plan = plan_of(
+        aggregate_code_metadata(
+            meds_df,
+            aggregations=["values/n_occurrences", "values/sum", "values/sum_sqd"],
+            sum_decimal_scale=6,
+        )
+    )
+    assert plan.count("Exchange ") == 1, plan
+    assert "Exchange hashpartitioning(code" in plan, plan
+
+
+@pytest.mark.parametrize(
+    "consumer", ["occlude_outliers", "normalization", "filter_measurements"]
+)
+def test_codes_table_consumers_do_not_reaggregate(spark, meds_df, consumer):
+    """The codes table is unique by construction, so its consumers
+    broadcast it as is: no aggregate over it on the broadcast side."""
+    import importlib
+
+    stage = getattr(
+        importlib.import_module(f"meds_transforms_spark.operators.{consumer}"), consumer
+    )
+    kw = {"min_subjects_per_code": 2} if consumer == "filter_measurements" else {}
+    codes = [r.code for r in meds_df.select("code").distinct().collect()]
+    meta = spark.createDataFrame(
+        [(c, i, 2, 2, 1.0, 1.0) for i, c in enumerate(codes)],
+        "code string, `code/vocab_index` int, `code/n_subjects` long, "
+        "`values/n_occurrences` long, `values/sum` double, `values/sum_sqd` double",
+    )
+    plan = plan_of(stage(meds_df, meta, **kw))
+    assert "BroadcastExchange" in plan, plan
+    assert "HashAggregate" not in plan, plan
 
 
 def test_pipeline_checkpoint_resume(spark, meds_df, tmp_path):
