@@ -50,8 +50,9 @@ BENCH_QUERIES = [
     # worker of the ~32-process pool each pass, so the interleaved
     # median measures scratch-pool cold-start roulette (9.7 s) rather
     # than the ~3 s steady path — a pure-noise regression signal.
-    # It is correctness-gated in the driver prefix and perf-tracked by
-    # `scripts/scale_round9.py bigdoc_spark` (sequential, warmed).
+    # It is correctness-gated in the driver prefix; its sequential,
+    # warmed timings are in SCALING.md's round-9 section and its
+    # round-10 "bigdoc kernel steady-state throughput row".
     "docs_substring_dedup",
     "docs_domain_mix",
     "docs_unigram_logprob",

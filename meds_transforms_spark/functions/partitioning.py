@@ -1,9 +1,8 @@
 """Partitioning & skew utilities — explicit knobs beyond AQE.
 
 AQE's skew-join splitting handles most runtime skew; these helpers cover
-the cases it can't: skewed *aggregation* keys (one ultra-common code /
-token / bucket) and deliberate co-partitioning of a dataset for a chain
-of per-subject operators.
+what it can't: a skewed *aggregation* key (one ultra-common code /
+token / bucket) and a file layout clustered on two columns at once.
 """
 
 from __future__ import annotations
@@ -12,37 +11,6 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from meds_transforms_spark.schema import SUBJECT_ID
-
-
-def subject_partitioned(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """Hash-partition by subject so every subsequent per-subject window/
-    groupBy in the chain is shuffle-free (one exchange amortized over
-    the whole pipeline — the Spark analog of the reference's
-    subject-aligned shards, reshard_to_split.py:25-195)."""
-    parts = [n_partitions] if n_partitions else []
-    return df.repartition(*parts, SUBJECT_ID)
-
-
-def salted_count(
-    df: DataFrame,
-    keys: Sequence[str],
-    salt_buckets: int = 64,
-) -> DataFrame:
-    """Skew-proof row count per key: two-stage aggregation.
-
-    Stage 1 groups by (key, random salt) — the hot key's rows spread
-    over ``salt_buckets`` reducers; stage 2 sums the partials. Total
-    work is unchanged; the maximum single-reducer load drops by the
-    salt factor. Use when one key holds a double-digit percentage of
-    all rows (AQE can split skewed *join* partitions but a skewed
-    groupBy key still lands on one reducer for holistic aggregates).
-    """
-    keys = list(keys)
-    salted = df.withColumn("__salt", (F.rand(seed=0) * salt_buckets).cast("int"))
-    partial = salted.groupBy(*keys, "__salt").agg(F.count(F.lit(1)).alias("__c"))
-    return partial.groupBy(*keys).agg(F.sum("__c").alias("n"))
 
 
 def salted_distinct_count(

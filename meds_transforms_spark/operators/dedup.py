@@ -44,16 +44,6 @@ def _normalized(col: Column) -> Column:
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
-def char_shingles(col: Column, k: int = 5) -> Column:
-    """Distinct character k-shingles of normalized text, via sequence +
-    substring — built-in, no UDF."""
-    norm = _normalized(col)
-    n = F.greatest(F.length(norm) - F.lit(k - 1), F.lit(1))
-    return F.array_distinct(
-        F.transform(F.sequence(F.lit(1), n), lambda i: norm.substr(i, F.lit(k)))
-    )
-
-
 def _h64(hash_fn: str, *cols: Column) -> Column:
     """64-bit-ish hash of the ':'-joined string forms of ``cols``.
 
@@ -287,24 +277,6 @@ def lsh_band_buckets(
                 ),
             ).alias("__bucket"),
         )
-    )
-
-
-def minhash_signature(col: Column, num_hashes: int = 32, shingle_k: int = 5) -> Column:
-    """Classic per-seed MinHash signature as a column expression.
-
-    NOTE: interpreted-HOF cost is O(num_hashes × shingles) per row —
-    fine for small frames and tests; the scale path is
-    ``lsh_band_buckets`` (relational one-permutation hashing).
-    """
-    sh = char_shingles(col, k=shingle_k)
-    hashed = F.transform(sh, lambda s: F.xxhash64(s))
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda seed: F.coalesce(
-            F.array_min(F.transform(hashed, lambda h: F.xxhash64(seed, h))),
-            F.lit(0).cast("long"),
-        ),
     )
 
 

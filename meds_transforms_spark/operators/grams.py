@@ -49,8 +49,6 @@ the word-n-gram semantics mirror operators/dedup.word_ngrams_of
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -60,97 +58,31 @@ from meds_transforms_spark.operators.dedup import _normalized
 
 
 def _with_kernel_parallelism(base: DataFrame) -> DataFrame:
-    """Rescue the Arrow kernel stage from SEVERELY starved input
-    partitioning (fewer splits than a quarter of the session's cores).
+    """Repartition the kernel's input only when it is severely starved:
+    ``n_splits * 4 <= target``, where the target is the task count the
+    input's size justifies (:func:`_size_aware_task_count`).
 
-    ``mapInArrow`` inherits its input's partitioning, so a 1-2-split
-    input caps the one CPU-bound stage of these operators at ~2 tasks
-    regardless of cluster size. That does NOT normally happen on a
-    scan: Spark's ``spark.sql.leafNodeDefaultParallelism`` already
-    sizes local parquet splits toward core count (a 73 MB 2-file dir
-    scans as 15 splits on local[32] — measured round 8). It DOES
-    happen when the kernel consumes an AQE-coalesced upstream exchange
-    (advisory 64 MB targets can collapse a small shuffle to 1
-    partition) or an explicitly coalesced frame. Only then is a
-    round-robin repartition of the thin (id, normalized-text)
-    projection worth its shuffle: round-8 A/B at 500k docs measured
-    repartitioning a 15-split input to 32 as a consistent LOSS
-    (+30-80% wall: one more exchange, double-size Python worker pool,
-    no CPU win), while the 1-split input's kernel critical path is
-    ~20 s single-threaded that the repartition reclaims. Threshold
-    n·4 ≤ cores keeps exactly the rescue case. On a real cluster a
-    100 TB scan yields far more splits than cores, so the branch is
-    dead there; streaming frames pass through untouched (no ``.rdd``
-    on a stream). ``SPARK_GRAFT_KERNEL_PARALLELISM=0`` disables, ``=N``
-    forces N partitions whenever the input has fewer.
+    ``mapInArrow`` inherits its input's partitioning, so an
+    AQE-coalesced upstream exchange or a ``coalesce(1)`` caps the one
+    CPU-bound stage at 1-2 tasks. Scans rarely need it: Spark already
+    sizes local parquet splits toward the core count, and at 500k docs
+    repartitioning a 15-split input to 32 cost 30-80% more wall time
+    (one more exchange, twice the Python workers, no CPU gained).
+    Sizing the target by bytes keeps a tiny corpus from spinning up
+    the whole worker pool for milliseconds of compute (a 584 KB corpus
+    fanned out to 32 tasks ran minhash 2.1x slower at 32 cores).
 
-    Probe cost (round-9 fix, ADVICE r08): the count must NOT come from
-    ``.rdd`` on an exchange-containing plan — under AQE that
-    *materializes the upstream query stages eagerly* (runs Spark jobs
-    at plan-composition time, then re-runs them at the real action:
-    no cross-query exchange reuse). The probe is therefore two-step
-    and job-free: (1) the pre-AQE physical plan's static
-    ``outputPartitioning().numPartitions()`` — known without execution
-    for exactly the rescue targets (``repartition(n)``/``coalesce(n)``
-    roots report n; scans and aggregates report 0 = unknown); (2) for
-    unknown counts, ``.rdd`` ONLY when the optimized plan is pure
-    scan/project/filter, where RDD conversion just computes file
-    splits. A shuffle-rooted plan with unknown static count (e.g. an
-    AQE-coalescible aggregate feeding the kernel) skips the auto
-    rescue — set ``SPARK_GRAFT_KERNEL_PARALLELISM=N`` explicitly for
-    those. Explicit ``=N`` honors the same contract as auto: a
-    scan-rooted input is probed (job-free) and left alone when it
-    already has ≥ N splits; only shuffle-rooted inputs — where no
-    job-free count exists and which are the documented use-case for
-    the env — repartition unconditionally.
-
-    SIZE-AWARE target (round-11, guide §2 "make partitioning
-    scale-adaptive"): the rescue target is no longer a flat
-    ``defaultParallelism`` but ``min(cores, ceil(estimated input
-    bytes / SPARK_GRAFT_KERNEL_TASK_BYTES))`` using the optimized
-    logical plan's size estimate (job-free planner statistics — file
-    bytes for scans). A starved input only fans out to as many tasks
-    as carry ≥ ~4 MB of payload each: round-10's flat-cores rescue
-    round-robin-exchanged a 584 KB corpus into 32 partitions and spun
-    the full Python worker pool for milliseconds of kernel compute —
-    the driver-measured docs_minhash_dedup 0.53× regression and its
-    8-beats-32-core anti-scaling. Interleaved A/B at 32 cores/sf0.1:
-    minhash 2.32→1.09 s median, winnow_contains 4.74→3.28,
-    winnow_overlap 3.31→2.65, substring_dedup 3.74→2.88, and 1-2
-    fewer jobs/run each. Plans with unknown/absurd size estimates
-    (Long.Max defaults) clamp to cores, i.e. the old behavior; the
-    4× starvation gate now compares against the size-aware target, so
-    a tiny 1-split input is simply left alone.
+    The split count must be read without running a job: ``.rdd`` on a
+    plan with an exchange makes AQE run the upstream stages now and
+    again at the real action. So it comes from the pre-AQE physical
+    plan (known for ``repartition``/``coalesce`` roots) or, for a pure
+    scan/project/filter plan, from ``.rdd``, which only lists file
+    splits. A shuffle-rooted plan with an unknown count is left alone.
     """
-    if base.isStreaming:
+    if base.isStreaming:  # no .rdd on a stream
         return base
-    raw = os.environ.get("SPARK_GRAFT_KERNEL_PARALLELISM", "auto").strip().lower()
-    if raw in ("0", "off", "none", "false"):
-        return base
-    if raw != "auto":
-        try:
-            target = int(raw)
-        except ValueError:  # exported-but-garbage env: behave as auto
-            target = 0
-        if target > 0:
-            n = _static_partition_count(base)
-            if n is None and _is_scan_rooted(base):
-                # Plain scans report UnknownPartitioning; their real
-                # split count is job-free to read (ADVICE r09 medium —
-                # a 200-split scan with =32 set must NOT be coalesced).
-                try:
-                    n = base.rdd.getNumPartitions()
-                except Exception:
-                    n = None
-            if n is None or n < target:
-                # Unknown count on a shuffle-rooted plan: =N is the
-                # documented escape hatch for exactly that shape, so
-                # repartition unconditionally there.
-                return base.repartition(target)
-            return base
-        # unparseable / non-positive explicit value: fall back to auto
     cores = base.sparkSession.sparkContext.defaultParallelism
-    target = min(cores, _size_aware_task_count(base, cores))
+    target = _size_aware_task_count(base, cores)
     n = _static_partition_count(base)
     if n is None:
         if not _is_scan_rooted(base):
@@ -168,26 +100,17 @@ _KERNEL_TASK_BYTES = 4 << 20  # ≥ ~20 ms kernel compute per task
 
 
 def _size_aware_task_count(df: DataFrame, cores: int) -> int:
-    """How many kernel tasks the input's SIZE justifies: ceil(estimated
-    bytes / task-bytes), read job-free from the optimized logical
-    plan's statistics (file size for scans, propagated through
-    project/filter). Unknown or absurd estimates (Catalyst's Long.Max
-    default for unsized relations) return ``cores`` — the pre-round-11
-    flat target."""
-    raw = os.environ.get("SPARK_GRAFT_KERNEL_TASK_BYTES", "").strip()
-    try:
-        task_bytes = int(raw) if raw else _KERNEL_TASK_BYTES
-    except ValueError:
-        task_bytes = _KERNEL_TASK_BYTES
-    if task_bytes <= 0:
-        return cores
+    """ceil(estimated input bytes / ``_KERNEL_TASK_BYTES``), capped at
+    ``cores``, from the optimized plan's statistics (job-free; file
+    bytes for scans). Unknown estimates (Catalyst's Long.Max default
+    for unsized relations) give ``cores``."""
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return cores
     if est < 0 or est > (1 << 60):  # unknown / defaulted estimate
         return cores
-    return max(1, min(cores, -(-est // task_bytes)))
+    return max(1, min(cores, -(-est // _KERNEL_TASK_BYTES)))
 
 
 def _static_partition_count(df: DataFrame) -> int | None:
@@ -277,22 +200,6 @@ def _flat_utf8(arr):
     return data, offs
 
 
-def _prefix(x: np.ndarray):
-    """(S, bpow) prefix arrays over byte stream ``x`` (uint64), such
-    that hash(x[a:b]) == bpow[b] * (S[b] - S[a]) mod 2^64."""
-    n = len(x)
-    with np.errstate(over="ignore"):
-        bpow = np.ones(n + 1, dtype=np.uint64)
-        binvpow = np.ones(n + 1, dtype=np.uint64)
-        if n:
-            np.cumprod(np.full(n, POLY_BASE, dtype=np.uint64), out=bpow[1:])
-            np.cumprod(np.full(n, POLY_BASE_INV, dtype=np.uint64), out=binvpow[1:])
-        s = np.zeros(n + 1, dtype=np.uint64)
-        if n:
-            np.cumsum(binvpow[1:] * x, out=s[1:])
-    return s, bpow
-
-
 # ----------------------------------------------------------------------
 # Per-worker scratch pool
 # ----------------------------------------------------------------------
@@ -300,20 +207,17 @@ def _prefix(x: np.ndarray):
 # threshold (<= 32 MB) is served by mmap and RETURNED TO THE OS on
 # free — so each slice of a big batch re-faults hundreds of MB of
 # zero-filled pages. On hosts with slow first-touch faulting this
-# dominates the kernels end-to-end (measured round 9: the 38 MB bigdoc
-# batch spent ~80% of a 38 s winnow pass in page faults; with the pool
-# the same pass is ~2 s). It is also the root cause of the round-8
-# "sporadic rising-cost mapInArrow" anomaly: per-pass wall time tracked
-# the allocator's mmap/munmap churn, not the compute. The pool keeps
-# one named, grow-only buffer per (name, dtype) per worker process, so
-# steady-state kernel passes touch only warm pages.
+# dominates the kernels end-to-end: the 38 MB bigdoc batch spent ~80%
+# of a 38 s winnow pass in page faults, and ~2 s with the pool
+# (SCALING.md, round 9). The pool keeps one named, grow-only buffer
+# per (name, dtype) per worker process, so steady-state kernel passes
+# touch only warm pages.
 #
 # Peak pooled bytes per worker ≈ 70 × the largest text slice processed
 # (all the n-sized temporaries below) — ~1.1 GB at the 16 MB
-# _MAX_SLICE_BYTES bound, the same transient footprint the unpooled
-# kernels already had, now simply kept warm. Workers that only ever see
-# small slices keep small pools. ``SPARK_GRAFT_KERNEL_SCRATCH=0``
-# disables pooling (every _scr call falls back to a fresh allocation).
+# _MAX_SLICE_BYTES bound, the same transient footprint fresh
+# allocations would have, kept warm. Workers that only ever see small
+# slices keep small pools.
 
 _SCRATCH: dict = {}
 
@@ -339,10 +243,6 @@ def _hugepage_empty(n: int, dtype) -> np.ndarray:
 def _scr(name: str, n: int, dtype) -> np.ndarray:
     """Length-``n`` view of the named per-worker reusable buffer
     (grow-only; contents UNDEFINED — callers must fully overwrite)."""
-    if os.environ.get("SPARK_GRAFT_KERNEL_SCRATCH", "1").strip().lower() in (
-        "0", "off", "false", "none",
-    ):
-        return np.empty(n, dtype=dtype)
     key = (name, np.dtype(dtype).str)
     buf = _SCRATCH.get(key)
     if buf is None or buf.shape[0] < n:
@@ -352,9 +252,10 @@ def _scr(name: str, n: int, dtype) -> np.ndarray:
 
 
 def _prefix_pooled(data: np.ndarray):
-    """:func:`_prefix` into pooled buffers — identical mathematical
-    contract, zero fresh large allocations, and no widened copy of the
-    byte stream (``data`` stays uint8; the one place it enters the
+    """(S, bpow) prefix arrays over byte stream ``data`` such that
+    hash(data[a:b]) == bpow[b] * (S[b] - S[a]) mod 2^64, computed into
+    pooled buffers: zero fresh large allocations, and no widened copy
+    of the byte stream (``data`` stays uint8; the one place it enters the
     arithmetic upcasts inside the ufunc inner loop). The returned
     views alias the ``s``/``bpow`` pool entries; callers must not
     interleave with another pooled prefix computation."""

@@ -65,15 +65,3 @@ SUBJECT_SPLITS_SCHEMA = T.StructType(
 TRAIN_SPLIT = "train"
 TUNING_SPLIT = "tuning"
 HELD_OUT_SPLIT = "held_out"
-
-
-def ensure_meds_columns(df):
-    """Validate that a DataFrame carries the mandatory MEDS columns.
-
-    Extra columns are permitted and flow through stages (reference:
-    stages/aggregate_code_metadata/aggregate_code_metadata.py:254-260).
-    """
-    missing = [c for c in MANDATORY_COLUMNS if c not in df.columns]
-    if missing:
-        raise ValueError(f"DataFrame is missing mandatory MEDS columns: {missing}")
-    return df

@@ -20,19 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-TABLES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
@@ -55,10 +42,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # like unix_micros (TIMESTAMP-only) work downstream.
             df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
 
 
 def events_as_meds(

@@ -13,7 +13,7 @@ queries build and assert:
 - sliced results are IDENTICAL to a single-slice pass (slicing
   invariance — the class of bug the rebase fix addressed);
 - the scratch pool (round-9 page-fault fix) does not change results
-  (``SPARK_GRAFT_KERNEL_SCRATCH=0`` vs pooled);
+  when a grown pool's stale contents are reused for a smaller batch;
 - the winnow fingerprint stream respects the 2/(w+1) winnowing density
   bound on the PRE-distinct selection (the SCALING.md density check).
 """
@@ -99,18 +99,45 @@ def test_minhash_slicing_invariance(bigdoc_batch):
     assert sliced == whole and sliced
 
 
-def test_scratch_pool_toggle_identical(bigdoc_batch):
-    pooled, _ = _winnow_all(bigdoc_batch, G._MAX_SLICE_BYTES)
-    old = os.environ.get("SPARK_GRAFT_KERNEL_SCRATCH")
-    try:
-        os.environ["SPARK_GRAFT_KERNEL_SCRATCH"] = "0"
-        unpooled, _ = _winnow_all(bigdoc_batch, G._MAX_SLICE_BYTES)
-    finally:
-        if old is None:
-            os.environ.pop("SPARK_GRAFT_KERNEL_SCRATCH", None)
-        else:
-            os.environ["SPARK_GRAFT_KERNEL_SCRATCH"] = old
-    assert pooled == unpooled
+@pytest.fixture(scope="module")
+def small_batch(bigdoc_batch):
+    """A few KB of the same documents at ragged lengths, plus docs
+    shorter than the gram length and an empty one."""
+    texts = [
+        t[: 300 + 97 * i]
+        for i, t in enumerate(bigdoc_batch.column(1).to_pylist())
+    ] + ["abc", ""]
+    ids = pa.array(range(len(texts)), pa.int64())
+    return pa.RecordBatch.from_arrays(
+        [ids, pa.array(texts, pa.string())], names=["doc_id", "__txt"]
+    )
+
+
+def _pool_bytes():
+    return sum(buf.nbytes for buf in G._SCRATCH.values())
+
+
+def test_scratch_pool_reuse_identical(bigdoc_batch, small_batch):
+    """Pooled buffers are grow-only and handed out with stale contents:
+    a small batch must give the same winnow and minhash results on a
+    fresh pool and on one the bigdoc batch has grown and dirtied."""
+
+    def small_results():
+        return (
+            _winnow_all(small_batch, G._MAX_SLICE_BYTES)[0],
+            _minhash_all(small_batch, G._MAX_SLICE_BYTES)[0],
+        )
+
+    G._SCRATCH.clear()
+    fresh = small_results()
+    fresh_bytes = _pool_bytes()
+    big_w, _ = _winnow_all(bigdoc_batch, G._MAX_SLICE_BYTES)
+    big_m, _ = _minhash_all(bigdoc_batch, G._MAX_SLICE_BYTES)
+    assert big_w and big_m
+    assert _pool_bytes() > 100 * fresh_bytes  # the pool really grew
+    reused = small_results()
+    assert all(fresh)
+    assert reused == fresh
 
 
 def test_winnow_density_bound(bigdoc_batch):

@@ -238,18 +238,16 @@ def test_jaccard_pairs_arrow_matches_expr(spark):
     assert a == e and a
 
 
-def test_kernel_parallelism_rescues_starved_input(spark):
+def test_kernel_parallelism_rescues_starved_input(spark, monkeypatch, tmp_path):
     """_with_kernel_parallelism repartitions only SEVERELY starved
-    inputs (n_parts·4 <= target), leaves healthy scans untouched, and
-    honors the off/forced env modes — the round-8 policy measured at
-    500k docs (repartitioning a 15-split input was a consistent loss;
-    a 1-split input's single-threaded kernel is the rescue case).
-    Round-11: the target is SIZE-AWARE (ceil(estimated bytes /
-    SPARK_GRAFT_KERNEL_TASK_BYTES), capped at cores), so a tiny
-    starved input is left alone instead of fanning out the whole
-    Python worker pool for milliseconds of kernel compute."""
-    import os
-
+    inputs (n_parts·4 <= target) and leaves healthy ones untouched
+    (repartitioning a 15-split input was a consistent loss at 500k
+    docs; a 1-split input's single-threaded kernel is the rescue case).
+    The target is SIZE-AWARE (ceil(estimated bytes /
+    _KERNEL_TASK_BYTES), capped at cores), so a tiny starved input is
+    left alone instead of fanning out the whole Python worker pool for
+    milliseconds of kernel compute."""
+    from meds_transforms_spark.operators import grams
     from meds_transforms_spark.operators.grams import (
         _with_kernel_parallelism,
         winnow_fingerprints_poly,
@@ -262,68 +260,40 @@ def test_kernel_parallelism_rescues_starved_input(spark):
     )
     starved = docs.repartition(1)
     healthy = docs.repartition(cores)
-    old = os.environ.get("SPARK_GRAFT_KERNEL_PARALLELISM")
-    old_tb = os.environ.get("SPARK_GRAFT_KERNEL_TASK_BYTES")
-    try:
-        # Default task-bytes (4 MB): a KB-sized SIZED input (parquet
-        # scan — planner stats know file bytes) justifies ONE task —
-        # no rescue, regardless of starvation. The python-local frame
-        # has UNKNOWN stats (Long.Max) and keeps the old flat-cores
-        # behavior below.
-        os.environ["SPARK_GRAFT_KERNEL_PARALLELISM"] = "auto"
-        os.environ.pop("SPARK_GRAFT_KERNEL_TASK_BYTES", None)
-        import tempfile
-
-        with tempfile.TemporaryDirectory() as tmp:
-            pq = f"{tmp}/tiny.parquet"
-            docs.coalesce(1).write.parquet(pq)
-            tiny_scan = spark.read.parquet(pq)
-            assert tiny_scan.rdd.getNumPartitions() < cores  # starved
-            assert (
-                _with_kernel_parallelism(tiny_scan).rdd.getNumPartitions()
-                == tiny_scan.rdd.getNumPartitions()
-            )
-            # size target between n and cores: rescue lands ON the
-            # size target (bytes-justified tasks), not on flat cores.
-            est = int(
-                tiny_scan._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-            if cores >= 8 and est >= 8:
-                os.environ["SPARK_GRAFT_KERNEL_TASK_BYTES"] = str(
-                    -(-est // (cores // 2))
-                )
-                got = _with_kernel_parallelism(tiny_scan).rdd.getNumPartitions()
-                assert 4 <= got <= cores // 2, got
-        # 1 byte/task => size target == cores: the pre-round-11 policy.
-        os.environ["SPARK_GRAFT_KERNEL_TASK_BYTES"] = "1"
-        assert _with_kernel_parallelism(starved).rdd.getNumPartitions() == cores
-        assert _with_kernel_parallelism(healthy).rdd.getNumPartitions() == cores
-        # a moderately-split input (half of cores) is NOT rescued
-        if cores >= 4:
-            mid = docs.repartition(cores // 2)
-            assert (
-                _with_kernel_parallelism(mid).rdd.getNumPartitions() == cores // 2
-            )
-        os.environ["SPARK_GRAFT_KERNEL_TASK_BYTES"] = "1"
-        os.environ["SPARK_GRAFT_KERNEL_PARALLELISM"] = "0"
-        assert _with_kernel_parallelism(starved).rdd.getNumPartitions() == 1
-        os.environ["SPARK_GRAFT_KERNEL_PARALLELISM"] = "7"
-        assert _with_kernel_parallelism(starved).rdd.getNumPartitions() == 7
-        # results are partitioning-invariant through the rescue path
-        os.environ["SPARK_GRAFT_KERNEL_PARALLELISM"] = "auto"
-        a = {(r.doc_id, r.fp) for r in winnow_fingerprints_poly(starved).collect()}
-        os.environ["SPARK_GRAFT_KERNEL_PARALLELISM"] = "0"
-        b = {(r.doc_id, r.fp) for r in winnow_fingerprints_poly(starved).collect()}
-        assert a == b and a
-    finally:
-        for key, val in (
-            ("SPARK_GRAFT_KERNEL_PARALLELISM", old),
-            ("SPARK_GRAFT_KERNEL_TASK_BYTES", old_tb),
-        ):
-            if val is None:
-                os.environ.pop(key, None)
-            else:
-                os.environ[key] = val
+    # Default task-bytes (4 MB): a KB-sized SIZED input (parquet scan —
+    # planner stats know file bytes) justifies ONE task — no rescue,
+    # regardless of starvation. The python-local frame has UNKNOWN
+    # stats (Long.Max) and keeps the flat-cores target below.
+    pq = str(tmp_path / "tiny.parquet")
+    docs.coalesce(1).write.parquet(pq)
+    tiny_scan = spark.read.parquet(pq)
+    n_tiny = tiny_scan.rdd.getNumPartitions()
+    assert n_tiny < cores  # starved
+    assert _with_kernel_parallelism(tiny_scan).rdd.getNumPartitions() == n_tiny
+    # size target between n and cores: rescue lands ON the size target
+    # (bytes-justified tasks), not on flat cores.
+    est = int(tiny_scan._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if cores >= 8 and est >= 8:
+        monkeypatch.setattr(grams, "_KERNEL_TASK_BYTES", -(-est // (cores // 2)))
+        got = _with_kernel_parallelism(tiny_scan).rdd.getNumPartitions()
+        assert 4 <= got <= cores // 2, got
+    # 1 byte/task => size target == cores.
+    monkeypatch.setattr(grams, "_KERNEL_TASK_BYTES", 1)
+    assert _with_kernel_parallelism(starved).rdd.getNumPartitions() == cores
+    assert _with_kernel_parallelism(healthy).rdd.getNumPartitions() == cores
+    # a moderately-split input (half of cores) is NOT rescued
+    if cores >= 4:
+        mid = docs.repartition(cores // 2)
+        assert _with_kernel_parallelism(mid).rdd.getNumPartitions() == cores // 2
+    # results are partitioning-invariant through the rescue path
+    rescued = winnow_fingerprints_poly(starved)
+    kept = winnow_fingerprints_poly(starved, rescue_starved=False)
+    assert kept.rdd.getNumPartitions() == 1
+    if cores >= 4:
+        assert rescued.rdd.getNumPartitions() == cores
+    a = {(r.doc_id, r.fp) for r in rescued.collect()}
+    b = {(r.doc_id, r.fp) for r in kept.collect()}
+    assert a == b and a
 
 
 def test_default_hash_fn_is_poly64_kernel(spark):
