@@ -7,7 +7,6 @@ the large-scale training-data extensions.
 
 from meds_transforms_spark.operators.base import (
     Stage,
-    bind_stage,
     get_stage,
     register_stage,
     registered_stages,
@@ -26,7 +25,6 @@ for _m in _pkgutil.iter_modules(__path__):
 
 __all__ = [
     "Stage",
-    "bind_stage",
     "get_stage",
     "register_stage",
     "registered_stages",

@@ -19,7 +19,6 @@ Stages registered here are discoverable by name for YAML pipelines
 
 from __future__ import annotations
 
-import functools
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -187,11 +186,3 @@ def registered_stages() -> dict[str, Stage]:
 
     _load_entry_point_stages()
     return dict(_REGISTRY)
-
-
-def bind_stage(name: str, **cfg) -> Callable:
-    """Partial-apply config → a ``DataFrame -> DataFrame`` closure, the
-    analog of compute-fn binding (compute_modes/compute_fn.py:183-317).
-    Usable with ``df.transform(...)``."""
-    stage = get_stage(name)
-    return functools.partial(stage, **cfg)

@@ -51,7 +51,7 @@ def ngram_decontaminate(
     Overlap is computed on normalized text (lowercased, whitespace
     collapsed). Documents shorter than ``n`` words contribute their
     full token window as one "gram", matching the n-gram definition in
-    ``dedup.word_ngrams`` — an exact short eval string still
+    ``dedup.word_ngrams_of`` — an exact short eval string still
     decontaminates its copies.
 
     Gram keys are 64-bit hashes; equal windows ⇔ equal grams either

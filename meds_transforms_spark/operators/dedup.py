@@ -91,15 +91,6 @@ def word_ngrams_of(toks: Column, n: int = 3) -> Column:
     )
 
 
-def word_ngrams(col: Column, n: int = 3) -> Column:
-    """Distinct word n-grams (space-joined) of normalized text.
-
-    Convenience single-expression form for small frames/tests; in
-    operator plans prefer materializing :func:`word_tokens` into a
-    column and calling :func:`word_ngrams_of` (see its note)."""
-    return word_ngrams_of(word_tokens(col), n)
-
-
 @register_stage("exact_dedup")
 def exact_dedup(
     df: DataFrame,
@@ -569,8 +560,8 @@ def embedding_cosine_dedup(
         from meds_transforms_spark.operators.similarity import l2_norm
 
         # Materialize the norm into a COLUMN before the per-component
-        # divide: Catalyst does no CSE inside HOF lambdas, so the
-        # single-expression l2_normalize re-evaluates the O(d) norm
+        # divide: Catalyst does no CSE inside HOF lambdas, so a norm
+        # captured in the divide's lambda re-evaluates the O(d)
         # aggregate once PER COMPONENT — O(d²) per row (the measured
         # HOF-CSE pitfall, SCALING.md). Same floats, one norm eval.
         bucketed = (
@@ -865,9 +856,9 @@ def _cosine_dedup_within(
     else:
         from meds_transforms_spark.operators.similarity import l2_norm
 
-        # norm as a column, divide in the lambda — NOT l2_normalize's
-        # single-expression form, whose captured norm aggregate
-        # re-evaluates per component (O(d²)/row; HOF-CSE pitfall)
+        # norm as a column, divide in the lambda — a norm captured in
+        # the lambda would re-evaluate per component (O(d²)/row;
+        # HOF-CSE pitfall)
         normed = (
             bucketed.withColumn("__vn", l2_norm(F.col(vec_col)))
             .withColumn(

@@ -13,10 +13,9 @@ a durable INDEX and dedup each incoming batch against it:
    side is a (id, bucket) long table; AQE broadcasts the batch
    buckets, so the index is probed map-side and never shuffled. For a
    standing deployment, save the index with ``saveAsTable`` bucketed
-   by ``__bucket`` (see ``functions/partitioning``) and even that
-   probe becomes co-located;
-3. survivors' buckets are the index DELTA — append them and the next
-   batch dedups against corpus + this batch.
+   by ``__bucket`` and even that probe becomes co-located;
+3. the kept docs' ``build_minhash_index`` rows are the index delta —
+   append them and the next batch dedups against corpus + this batch.
 
 Index parameters (num_hashes/bands/shingle_k/hash_fn) are stored next
 to the saved index; pass the loaded dict as ``index_params=`` and the
@@ -132,58 +131,3 @@ def dedup_against_index(
         return out.filter(~F.col("dup_of_corpus")).drop("dup_of_corpus")
     return out
 
-
-def ingest_batch(
-    df: DataFrame,
-    index: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    index_params: dict | None = None,
-    new_buckets: DataFrame | None = None,
-    **params,
-) -> tuple[DataFrame, DataFrame]:
-    """Full incremental-ingest step: returns ``(clean_batch,
-    index_delta)``.
-
-    ``clean_batch`` drops docs colliding with the index AND in-batch
-    near-dups (keeping each in-batch group's min-id representative,
-    exactly like the batch ``minhash_lsh_dedup``); ``index_delta`` is
-    the survivors' bucket rows — union it onto the index for the next
-    batch.
-
-    ``clean_batch`` and ``index_delta`` share the banding lineage; a
-    caller materializing BOTH should pre-compute and persist the
-    bucket table and pass it as ``new_buckets`` so the shingle
-    explode + index probe run once (the streaming ingest sink does).
-    """
-    from pyspark.sql import Window as W
-
-    params = _effective_params(index_params, params)
-    if new_buckets is None:
-        new_buckets = build_minhash_index(df, text_col, id_col, **params)
-    corpus_hits = (
-        new_buckets.join(
-            index.select("__bucket").distinct(), "__bucket", "left_semi"
-        )
-        .select(id_col)
-        .distinct()
-    )
-    survivors_b = new_buckets.join(corpus_hits, id_col, "left_anti")
-    # in-batch dedup on the remaining docs: min id per shared bucket
-    # survives; transitive chains within one batch resolve the same
-    # way as minhash_lsh_dedup's keeper election.
-    keeper = F.min(id_col).over(W.partitionBy("__bucket"))
-    losers = (
-        survivors_b.withColumn("__keep", keeper)
-        .filter(F.col("__keep") != F.col(id_col))
-        .select(id_col)
-        .distinct()
-    )
-    kept_ids = (
-        survivors_b.select(id_col).distinct().join(losers, id_col, "left_anti")
-    )
-    clean = df.join(kept_ids, id_col, "left_semi")
-    delta = survivors_b.join(kept_ids, id_col, "left_semi").select(
-        id_col, "__bucket"
-    )
-    return clean, delta

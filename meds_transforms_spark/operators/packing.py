@@ -188,13 +188,3 @@ def pack_sequences(
         )
         .select(id_col, F.col("__t").alias(token_col), "pack_id", "pack_pos", "pack_offset")
     )
-
-
-def pack_stats(packed: DataFrame, token_col: str = "n_tokens", budget: int = 2048) -> DataFrame:
-    """Per-pack fill statistics (docs, tokens, fill fraction) — the
-    packing-efficiency report."""
-    return packed.groupBy("pack_id").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(token_col).alias("n_tokens_total"),
-        (F.sum(token_col) / F.lit(float(budget))).alias("fill_fraction"),
-    )

@@ -1,7 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``cosine_similarity`` / ``l2_normalize``: built-in array HOF math
-  (zip_with + aggregate) — JVM-side dot products, no UDF.
+- ``cosine_similarity`` / ``l2_norm``: built-in array HOF math
+  (zip_with + aggregate) — JVM-side dot products, no UDF. Normalizing
+  callers materialize ``l2_norm`` into a column and divide by that
+  column: Catalyst does no CSE inside HOF lambdas, so a norm captured
+  in the divide's lambda re-evaluates once per component (O(d²) per
+  row; measured, SCALING.md).
 - ``brute_force_topk``: exact top-k neighbors for a set of query
   vectors — broadcast the (small) query side, window-rank per query.
   This is the correctness baseline and the right physical plan whenever
@@ -33,17 +37,6 @@ def dot(a: Column, b: Column) -> Column:
 
 def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-
-
-def l2_normalize(a: Column) -> Column:
-    """Single-expression normalize — convenience for small frames and
-    tests ONLY. The captured ``l2_norm`` aggregate re-evaluates once
-    per component inside the transform lambda (no HOF CSE — measured,
-    SCALING.md), making this O(d²) per row. In operator plans,
-    materialize the norm into a column and divide by the column
-    reference instead (see _cosine_dedup_within)."""
-    n = l2_norm(a)
-    return F.when(n > 0, F.transform(a, lambda v: v / n))
 
 
 def cosine_similarity(a: Column, b: Column, assume_normalized: bool = False) -> Column:

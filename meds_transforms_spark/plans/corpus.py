@@ -65,15 +65,6 @@ def prepare_training_corpus(
     )
 
 
-def write_training_corpus(corpus: DataFrame, path: str) -> None:
-    """Partitioned export: downstream readers prune by language/quality."""
-    (
-        corpus.write.mode("overwrite")
-        .partitionBy("lang_pred", "quality_bucket")
-        .parquet(path)
-    )
-
-
 def curate_corpus_dsir(
     docs,
     target,

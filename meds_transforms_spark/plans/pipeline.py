@@ -335,16 +335,13 @@ class Pipeline:
         return path if os.path.exists(os.path.join(path, "_SUCCESS")) else None
 
 
-def canonical_sort(df: DataFrame, global_order: bool = False) -> DataFrame:
+def canonical_sort(df: DataFrame) -> DataFrame:
     """The MEDS output order contract: (subject_id, time NULLS FIRST,
     __order) — the explicit-tiebreak replacement for Polars stable sorts
     (SURVEY §7 hard parts).
 
-    Default: subject-partitioned with per-partition order (each subject's
-    rows contiguous and ordered — what every consumer actually needs).
-    ``global_order=True`` range-partitions by subject first so files are
-    globally ordered across partitions too (costlier: sampling pass +
-    range exchange).
+    Subject-partitioned with per-partition order: each subject's rows
+    are contiguous and ordered, which is what every consumer needs.
 
     A ``split`` column leads the sort: a subject sits in one split, so
     each split's rows keep the contract, and a write partitioned by
@@ -356,9 +353,4 @@ def canonical_sort(df: DataFrame, global_order: bool = False) -> DataFrame:
         cols.insert(0, F.col("split"))
     if ORDER_KEY in df.columns:
         cols.append(F.col(ORDER_KEY))
-    part = (
-        df.repartitionByRange(SUBJECT_ID)
-        if global_order
-        else df.repartition(SUBJECT_ID)
-    )
-    return part.sortWithinPartitions(*cols)
+    return df.repartition(SUBJECT_ID).sortWithinPartitions(*cols)

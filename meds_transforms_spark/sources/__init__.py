@@ -1,3 +1,3 @@
-from meds_transforms_spark.sources.meds_dataset import MEDSDataset, read_parquet, write_parquet
+from meds_transforms_spark.sources.meds_dataset import MEDSDataset, write_parquet
 
-__all__ = ["MEDSDataset", "read_parquet", "write_parquet"]
+__all__ = ["MEDSDataset", "write_parquet"]

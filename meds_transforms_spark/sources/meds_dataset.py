@@ -27,20 +27,10 @@ import os
 from dataclasses import dataclass
 from typing import Iterable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from meds_transforms_spark.schema import SUBJECT_ID, TIME, ORDER_KEY, TRAIN_SPLIT
-
-
-def read_parquet(spark: SparkSession, path: str, predicate: Column | None = None) -> DataFrame:
-    """Lazy parquet scan (+ optional pushed-down filter).
-
-    Mirrors read_df / read_and_filter_fntr (dataframe/read_fn.py:16-86);
-    Catalyst pushes ``predicate`` into parquet row-group pruning.
-    """
-    df = spark.read.parquet(path)
-    return df.filter(predicate) if predicate is not None else df
 
 
 def write_parquet(df: DataFrame, path: str, partition_by: Iterable[str] | None = None) -> None:
@@ -111,9 +101,8 @@ class MEDSDataset:
     def train_data(self, **kw) -> DataFrame:
         return self.data(split=TRAIN_SPLIT, **kw)
 
-    def write_data(self, df: DataFrame, partition_by_split: bool = True) -> None:
-        cols = [c for c in df.columns]
-        part = ["split"] if partition_by_split and "split" in cols else None
+    def write_data(self, df: DataFrame) -> None:
+        part = ["split"] if "split" in df.columns else None
         write_parquet(df, self.data_dir, partition_by=part)
 
     # --- metadata plane -------------------------------------------------
@@ -375,45 +364,3 @@ def merge_meds_datasets(
         {"dataset_name": "+".join(names), "merged_from": names}
     )
     return out
-
-
-def compact_parquet_copy(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_file_bytes: int = 256 * 1024 * 1024,
-    sort_within_by: Iterable[str] | None = None,
-    mode: str = "overwrite",
-) -> int:
-    """Coalesce a small-file parquet directory into ~target-sized files
-    at a NEW location (src → dst copy).
-
-    For managed IN-PLACE compaction — write-audit-publish swap, crash
-    recovery journal, hive-partition-aware skew salting — use
-    :func:`meds_transforms_spark.sources.compaction.compact_parquet`
-    (this simpler copy variant deliberately has a distinct name so the
-    two cannot be confused).
-
-    The small-files problem is the dominant operational tax on long-
-    lived datasets (every file costs a task + open + footer read; a
-    stage-per-shard writer like the reference's produces one file per
-    shard per stage). This sizes output count from the ACTUAL input
-    bytes (filesystem listing, no data read), uses ``coalesce`` — a
-    shuffle-FREE narrow repartition, each output task reads several
-    input files sequentially — and optionally restores intra-file order
-    (e.g. ``(subject_id, time)``) so parquet min/max stats stay
-    selective after compaction. Returns the target file count.
-    """
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(src)
-    fs = p.getFileSystem(conf)
-    total = fs.getContentSummary(p).getLength()
-    n_files = max(1, -(-int(total) // int(target_file_bytes)))  # ceil
-
-    df = spark.read.parquet(src)
-    out = df.coalesce(n_files)
-    if sort_within_by:
-        out = out.sortWithinPartitions(*sort_within_by)
-    out.write.mode(mode).parquet(dst)
-    return n_files

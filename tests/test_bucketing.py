@@ -31,50 +31,3 @@ def test_bucketed_groupby_has_no_exchange(spark, meds_df, tmp_path):
     base_plan = base._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" in base_plan
     spark.sql("DROP TABLE IF EXISTS meds_bucketed")
-
-
-def test_zorder_interleave_bits(spark):
-    from pyspark.sql import functions as F
-
-    from meds_transforms_spark.functions.partitioning import zorder_value
-
-    rows = spark.range(1).select(
-        zorder_value(F.lit(5), F.lit(3), 3).alias("z53"),
-        zorder_value(F.lit(0), F.lit(7), 3).alias("z07"),
-        zorder_value(F.lit(7), F.lit(0), 3).alias("z70"),
-    ).collect()[0]
-    assert rows["z53"] == 27  # x bits at even, y bits at odd positions
-    assert rows["z07"] == 0b101010
-    assert rows["z70"] == 0b010101
-
-
-def test_write_zordered_clusters_both_dims(spark, tmp_path):
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from meds_transforms_spark.functions.partitioning import write_zordered
-
-    # 64x64 grid in random-ish (hash) order
-    df = spark.range(4096).select(
-        (F.xxhash64("id") % 64).alias("a"),
-        (F.xxhash64("id", "id") % 64).alias("b"),
-    ).select(F.abs("a").alias("a"), F.abs("b").alias("b"))
-    path = str(tmp_path / "zordered")
-    write_zordered(df, path, cols=("a", "b"), bits=6, n_files=16)
-
-    files = [f for f in glob.glob(f"{path}/*.parquet")]
-    assert len(files) > 4
-    # Each file must cover a narrow span in BOTH dimensions vs the full
-    # 0..63 range — the whole point of the curve layout.
-    spans_a, spans_b = [], []
-    for f in files:
-        pf = spark.read.parquet(f)
-        r = pf.agg(
-            (F.max("a") - F.min("a")).alias("sa"),
-            (F.max("b") - F.min("b")).alias("sb"),
-        ).collect()[0]
-        spans_a.append(r["sa"]); spans_b.append(r["sb"])
-    avg_a = sum(spans_a) / len(spans_a)
-    avg_b = sum(spans_b) / len(spans_b)
-    assert avg_a < 40 and avg_b < 40, (avg_a, avg_b)

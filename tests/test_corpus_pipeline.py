@@ -2,14 +2,9 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
 
-
-def test_prepare_training_corpus(spark, tmp_path):
-    from meds_transforms_spark.plans.corpus import (
-        prepare_training_corpus,
-        write_training_corpus,
-    )
+def test_prepare_training_corpus(spark):
+    from meds_transforms_spark.plans.corpus import prepare_training_corpus
 
     base = (
         "the quick brown fox jumps over the lazy dog and that is for sure "
@@ -35,19 +30,6 @@ def test_prepare_training_corpus(spark, tmp_path):
     assert r.n_tokens > 30 and 0 <= r.quality <= 1 and r.lang_pred == "en"
     assert isinstance(r.fingerprint, int)
     assert 0 <= r.quality_bucket <= 9
-
-    path = str(tmp_path / "corpus")
-    write_training_corpus(out, path)
-    back = spark.read.parquet(path)
-    assert back.count() == out.count()
-    # Partition pruning on the export layout.
-    plan = (
-        back.filter(F.col("lang_pred") == "en")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters: [isnotnull(lang_pred" in plan
 
 
 def test_curate_corpus_ccnet_composition(spark):

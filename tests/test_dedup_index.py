@@ -43,35 +43,6 @@ def test_flag_against_index(spark):
     assert "dup_of_corpus" not in dropped.columns
 
 
-def test_ingest_batch_dedups_in_batch_and_updates_index(spark):
-    from meds_transforms_spark.operators.dedup_index import (
-        build_minhash_index,
-        dedup_against_index,
-        ingest_batch,
-    )
-
-    corpus = _docs(spark, [(1, BASE)])
-    index = build_minhash_index(corpus)
-    batch = _docs(
-        spark,
-        [
-            (200, BASE + " with a twist"),   # dup of corpus
-            (201, FRESH),
-            (202, FRESH + " v2"),            # in-batch near-dup of 201
-            (203, OTHER),
-        ],
-    )
-    clean, delta = ingest_batch(batch, index)
-    kept = sorted(r.doc_id for r in clean.collect())
-    assert kept == [201, 203]  # 200 hit corpus, 202 lost to 201 (min id)
-    # updated index now catches copies of batch survivors
-    index2 = index.unionByName(delta)
-    nxt = _docs(spark, [(300, FRESH + " v3"), (301, "entirely novel text about sailing knots and rigging")])
-    out = {r.doc_id: r.dup_of_corpus for r in dedup_against_index(nxt, index2).collect()}
-    assert out[300] is True
-    assert out[301] is False
-
-
 def test_save_load_roundtrip_params(spark, tmp_path):
     from meds_transforms_spark.operators.dedup_index import (
         build_minhash_index,
@@ -87,30 +58,6 @@ def test_save_load_roundtrip_params(spark, tmp_path):
     assert sorted((r.doc_id, r["__bucket"]) for r in loaded.collect()) == sorted(
         (r.doc_id, r["__bucket"]) for r in idx.collect()
     )
-
-
-def test_matches_batch_dedup_semantics(spark):
-    """index-incremental dedup of (A then B) keeps the same survivor
-    set as one batch minhash_lsh_dedup over A ∪ B when batch ids are
-    all larger than corpus ids (min-id keeper election)."""
-    from meds_transforms_spark.operators.dedup import minhash_lsh_dedup
-    from meds_transforms_spark.operators.dedup_index import (
-        build_minhash_index,
-        ingest_batch,
-    )
-
-    a_rows = [(1, BASE), (2, OTHER)]
-    b_rows = [(10, BASE + " z"), (11, FRESH), (12, FRESH + " y")]
-    a, b = _docs(spark, a_rows), _docs(spark, b_rows)
-    clean, _ = ingest_batch(b, build_minhash_index(a))
-    incremental = {r.doc_id for r in a.select("doc_id").collect()} | {
-        r.doc_id for r in clean.select("doc_id").collect()
-    }
-    batch = {
-        r.doc_id
-        for r in minhash_lsh_dedup(a.unionByName(b)).select("doc_id").collect()
-    }
-    assert incremental == batch
 
 
 def test_param_mismatch_raises_and_sidecar_adopted(spark, tmp_path):

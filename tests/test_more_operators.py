@@ -91,22 +91,6 @@ def test_drop_regex_and_filter_rows(spark, meds_df):
     assert out2.count() == meds_df.filter(F.col("time").isNull()).count()
 
 
-def test_salted_distinct_count_exact(spark, meds_df):
-    from meds_transforms_spark.functions.partitioning import salted_distinct_count
-
-    got = {
-        r.code: r.n_distinct
-        for r in salted_distinct_count(meds_df, ["code"], "subject_id").collect()
-    }
-    want = {
-        r.code: r.n
-        for r in meds_df.groupBy("code")
-        .agg(F.countDistinct("subject_id").alias("n"))
-        .collect()
-    }
-    assert got == want
-
-
 def test_scrub_pii_counts_and_redaction(spark):
     from meds_transforms_spark.operators.text import scrub_pii
 

@@ -89,13 +89,3 @@ def test_packing_rejects_bad_lengths(spark):
     )
     with pytest.raises(Exception, match="non-positive"):
         pack_sequences(bad, budget=64).collect()
-
-
-def test_pack_stats(spark, doc_lengths):
-    from meds_transforms_spark.operators.packing import pack_sequences, pack_stats
-
-    packed = pack_sequences(doc_lengths, budget=256, num_partitions=4)
-    stats = pack_stats(packed, budget=256)
-    rows = stats.collect()
-    assert sum(r.n_docs for r in rows) == 200
-    assert all(0 < r.fill_fraction for r in rows)

@@ -1,4 +1,4 @@
-"""Dataset IO, resharding, match-revise, and streaming tests."""
+"""Dataset IO, resharding and match-revise tests."""
 
 from __future__ import annotations
 
@@ -236,139 +236,6 @@ def test_embedding_cosine_dedup(spark):
         for r in embedding_cosine_dedup(df, threshold=0.99, exact=True).collect()
     }
     assert out_e == out
-
-
-def test_streaming_windowed_counts(spark, meds_df, tmp_path):
-    from meds_transforms_spark.streaming.events import (
-        read_event_stream,
-        windowed_code_counts,
-    )
-
-    src = str(tmp_path / "stream_src")
-    meds_df.select("subject_id", "time", "code", "numeric_value", "text_value").write.parquet(src)
-    stream = read_event_stream(spark, src)
-    assert stream.isStreaming
-    agg = windowed_code_counts(stream, window="1 hour", watermark="2 hours")
-    out = str(tmp_path / "stream_out")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("codes_stream")
-        .outputMode("append")
-        .option("checkpointLocation", out)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # Append mode emits only watermark-closed windows; the important
-    # assertions are that the stream planned, ran, and committed.
-    assert q.lastProgress is not None
-    spark.sql("SELECT * FROM codes_stream").collect()
-
-
-def test_streaming_attribution_join(spark, tmp_path):
-    """Watermarked stream-stream interval join: purchases attribute to a
-    prior click within the horizon; a purchase 2h after the click (past
-    `within`) must NOT join."""
-    import datetime as dt
-
-    from meds_transforms_spark.streaming.events import attribution_join
-
-    t0 = dt.datetime(2024, 1, 1, 8, 0)
-
-    def minutes(m):
-        return t0 + dt.timedelta(minutes=m)
-
-    clicks_dir = str(tmp_path / "clicks")
-    buys_dir = str(tmp_path / "buys")
-    spark.createDataFrame(
-        [(1, minutes(0), "ad_A"), (2, minutes(5), "ad_B"), (3, minutes(0), "ad_C")],
-        "user_id long, ts timestamp, ad string",
-    ).write.parquet(clicks_dir)
-    spark.createDataFrame(
-        # user 1 buys 30min after click (inside 1h); user 3 buys 2h later
-        [(1, minutes(30), 9.99), (3, minutes(120), 5.0)],
-        "user_id long, ts timestamp, amount double",
-    ).write.parquet(buys_dir)
-
-    clicks = (
-        spark.readStream.schema("user_id long, ts timestamp, ad string")
-        .parquet(clicks_dir)
-    )
-    buys = (
-        spark.readStream.schema("user_id long, ts timestamp, amount double")
-        .parquet(buys_dir)
-    )
-    joined = attribution_join(
-        clicks, buys, within="1 hour", watermark="4 hours"
-    ).selectExpr("l.user_id AS user_id", "l.ad AS ad", "r.amount AS amount")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("attributed")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM attributed").collect()
-    got = {(r.user_id, r.ad, r.amount) for r in rows}
-    assert got == {(1, "ad_A", 9.99)}  # inner within-horizon match only
-
-
-def test_streaming_exact_dedup(spark, tmp_path):
-    import datetime as dt
-
-    from meds_transforms_spark.streaming.events import streaming_exact_dedup
-
-    t0 = dt.datetime(2024, 1, 1, 10, 0)
-    rows = [
-        (1, t0, "hello world"),
-        (2, t0 + dt.timedelta(minutes=1), "Hello   WORLD"),  # dup after normalize
-        (3, t0 + dt.timedelta(minutes=2), "different"),
-    ]
-    src = str(tmp_path / "docs_src")
-    spark.createDataFrame(rows, "doc_id long, ts timestamp, text string").write.parquet(src)
-    stream = (
-        spark.readStream.schema("doc_id long, ts timestamp, text string").parquet(src)
-    )
-    deduped = streaming_exact_dedup(stream, watermark="10 minutes")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName("dedup_stream")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {r["doc_id"] for r in spark.sql("SELECT * FROM dedup_stream").collect()}
-    # one of the two normalized-equal docs survives, plus the distinct one
-    assert 3 in got and len(got) == 2 and (1 in got or 2 in got)
-
-
-def test_compact_parquet_reduces_files(spark, tmp_path):
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from meds_transforms_spark.sources.meds_dataset import compact_parquet_copy
-
-    src = str(tmp_path / "small_files")
-    spark.range(10_000).select(
-        F.col("id"), (F.col("id") % 7).alias("k")
-    ).repartition(40).write.parquet(src)
-    assert len(glob.glob(f"{src}/*.parquet")) == 40
-
-    dst = str(tmp_path / "compacted")
-    n = compact_parquet_copy(
-        spark, src, dst, target_file_bytes=10**9, sort_within_by=["k", "id"]
-    )
-    assert n == 1
-    files = glob.glob(f"{dst}/*.parquet")
-    assert len(files) == 1
-    a = spark.read.parquet(src).groupBy("k").count().collect()
-    b = spark.read.parquet(dst).groupBy("k").count().collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_merge_meds_datasets(spark, meds_df, tmp_path):

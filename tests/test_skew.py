@@ -4,8 +4,8 @@ actually splits a heavy-hitter partition at runtime.
 This is the engine's answer to 'skewed keys hurt at 100 TB': no manual
 salting in the join path — AQE detects the oversized partition after
 the map stage and replans it as multiple sub-joins (plan shows
-`skew=true` on the SortMergeJoin). Salting utilities remain for
-AGGREGATIONS (functions/partitioning), where AQE can't help."""
+`skew=true` on the SortMergeJoin). AQE does not split skewed
+aggregations; this covers joins only."""
 
 from __future__ import annotations
 

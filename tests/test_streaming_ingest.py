@@ -1,73 +1,6 @@
-"""Streaming ingest-dedup (foreachBatch + durable MinHash index)."""
+"""Projection-only operators run unchanged on Structured Streaming input."""
 
 from __future__ import annotations
-
-import os
-
-
-BASE = (
-    "the quick brown fox jumps over the lazy dog while the band plays "
-    "a long and winding tune about distributed systems and parquet files"
-)
-FRESH = (
-    "completely different content about cooking pasta with garlic "
-    "butter and a generous handful of freshly grated parmesan cheese"
-)
-
-
-def _write_batch(spark, src_dir, rows, name):
-    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.mode(
-        "append"
-    ).parquet(src_dir)
-
-
-def test_stream_dedups_across_batches(spark, tmp_path):
-    from meds_transforms_spark.streaming.ingest_dedup import (
-        start_ingest_dedup_stream,
-    )
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    idx = str(tmp_path / "idx")
-    ckpt = str(tmp_path / "ckpt")
-
-    # batch 1: a fresh doc + an in-batch near-dup pair
-    _write_batch(
-        spark, src, [(1, BASE), (2, BASE + " v2"), (3, FRESH)], "b1"
-    )
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = start_ingest_dedup_stream(stream, idx, out, ckpt)
-    try:
-        q.processAllAvailable()
-        got = {r.doc_id for r in spark.read.parquet(out).collect()}
-        assert got == {1, 3}  # 2 lost the in-batch election to 1
-
-        # batch 2: a re-crawl of doc 1 + genuinely new content
-        _write_batch(
-            spark,
-            src,
-            [(10, BASE + " refreshed"), (11, "novel text about sailing knots and rigging practice")],
-            "b2",
-        )
-        q.processAllAvailable()
-        got = {r.doc_id for r in spark.read.parquet(out).collect()}
-        assert got == {1, 3, 11}  # 10 collided with the index
-    finally:
-        q.stop()
-
-    # the index survives restarts: a NEW query over a new source sees it
-    src2 = str(tmp_path / "src2")
-    ckpt2 = str(tmp_path / "ckpt2")
-    _write_batch(spark, src2, [(20, FRESH + " appended words")], "b3")
-    stream2 = spark.readStream.schema("doc_id long, text string").parquet(src2)
-    q2 = start_ingest_dedup_stream(stream2, idx, out, ckpt2)
-    try:
-        q2.processAllAvailable()
-        got = {r.doc_id for r in spark.read.parquet(out).collect()}
-        assert got == {1, 3, 11}  # 20 is a near-dup of indexed doc 3
-    finally:
-        q2.stop()
-    assert os.path.exists(os.path.join(idx, "state.json"))
 
 
 def test_stateless_text_operators_compose_on_streams(spark, tmp_path):
@@ -144,128 +77,3 @@ def test_quality_and_dsir_serving_on_streams(spark, tmp_path):
         assert rows[10].dsir_logweight > rows[11].dsir_logweight  # target vocab wins
     finally:
         q.stop()
-
-
-def test_replayed_batch_is_idempotent(spark, tmp_path):
-    """Kill-and-replay: delete the last checkpoint commit so Structured
-    Streaming RE-RUNS the final micro-batch on restart (the crash
-    window after foreachBatch side effects, before the commit write) —
-    the exactly-once story the ingest sink's idempotent writes claim.
-    Output must carry no dupes and no lost batch; the index must gain
-    no new distinct buckets; the state sidecar must not regress."""
-    import json
-    import os
-
-    from meds_transforms_spark.streaming.ingest_dedup import (
-        start_ingest_dedup_stream,
-    )
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    idx = str(tmp_path / "idx")
-    ckpt = str(tmp_path / "ckpt")
-
-    _write_batch(spark, src, [(1, BASE), (2, BASE + " v2"), (3, FRESH)], "b1")
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = start_ingest_dedup_stream(stream, idx, out, ckpt, trigger_once=True)
-    q.awaitTermination(120)
-
-    _write_batch(
-        spark,
-        src,
-        [(10, BASE + " refreshed"), (11, "novel text about sailing knots and rigging practice")],
-        "b2",
-    )
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = start_ingest_dedup_stream(stream, idx, out, ckpt, trigger_once=True)
-    q.awaitTermination(120)
-
-    docs_before = sorted(
-        (r.doc_id, r.__getitem__("__batch_id"))
-        for r in spark.read.parquet(out).collect()
-    )
-    buckets_before = {
-        (r.doc_id, r.__getitem__("__bucket"))
-        for r in spark.read.parquet(os.path.join(idx, "buckets")).collect()
-    }
-    with open(os.path.join(idx, "state.json")) as f:
-        state_before = json.load(f)["batch_id"]
-    assert {d for d, _ in docs_before} == {1, 3, 11}
-
-    # Simulate the crash: restart from a checkpoint image MISSING the
-    # last commit marker — the on-disk state of a process killed after
-    # foreachBatch's side effects but before the commit write. (The
-    # image is cloned to a fresh path because Spark 4's commit-log
-    # manager flags in-place deletion under a session that already
-    # tracked the file as "multiple queries using the checkpoint".)
-    import shutil
-
-    ckpt_crash = str(tmp_path / "ckpt_crash")
-    shutil.copytree(ckpt, ckpt_crash)
-    commits = sorted(
-        f
-        for f in os.listdir(os.path.join(ckpt_crash, "commits"))
-        if not f.startswith(".")
-    )
-    os.remove(os.path.join(ckpt_crash, "commits", commits[-1]))
-    crc = os.path.join(ckpt_crash, "commits", f".{commits[-1]}.crc")
-    if os.path.exists(crc):  # stale CRC sidecar breaks the commit-log rename
-        os.remove(crc)
-
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = start_ingest_dedup_stream(stream, idx, out, ckpt_crash, trigger_once=True)
-    q.awaitTermination(120)
-
-    docs_after = sorted(
-        (r.doc_id, r.__getitem__("__batch_id"))
-        for r in spark.read.parquet(out).collect()
-    )
-    buckets_after = {
-        (r.doc_id, r.__getitem__("__bucket"))
-        for r in spark.read.parquet(os.path.join(idx, "buckets")).collect()
-    }
-    with open(os.path.join(idx, "state.json")) as f:
-        state_after = json.load(f)["batch_id"]
-
-    assert docs_after == docs_before          # no dupes, no losses
-    assert buckets_after == buckets_before    # no new DISTINCT buckets
-    assert state_after == state_before        # sidecar did not regress
-
-
-def test_restart_with_conflicting_params_raises(spark, tmp_path):
-    """A stream restarted against an existing index with contradicting
-    MinHash parameters must fail the batch loudly (silent mismatch =
-    matching nothing = quietly re-ingesting the whole corpus)."""
-    import pyspark.errors
-
-    from meds_transforms_spark.streaming.ingest_dedup import (
-        start_ingest_dedup_stream,
-    )
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    idx = str(tmp_path / "idx")
-
-    _write_batch(spark, src, [(1, BASE), (2, FRESH)], "b1")
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = start_ingest_dedup_stream(
-        stream, idx, out, str(tmp_path / "ckpt1"), trigger_once=True
-    )
-    q.awaitTermination(120)
-
-    _write_batch(spark, src, [(5, "more brand new text appears here")], "b2")
-    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
-    q = start_ingest_dedup_stream(
-        stream,
-        idx,
-        out,
-        str(tmp_path / "ckpt2"),
-        trigger_once=True,
-        num_hashes=64,  # contradicts the persisted sidecar (32)
-    )
-    try:
-        q.awaitTermination(120)
-        raised = False
-    except pyspark.errors.exceptions.captured.StreamingQueryException:
-        raised = True
-    assert raised
