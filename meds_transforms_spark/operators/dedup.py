@@ -591,16 +591,22 @@ def _gram_dropped_exact(base: DataFrame, id_col: str, t2: int) -> DataFrame:
     quantized vectors, and evaluates an interpreted per-pair fold over
     every one; here each vector crosses one exchange ONCE
     (groupBy(__bucket).applyInPandas) and the within-bucket dot matrix
-    is one int64 matmul per column chunk.
+    is one matmul per column chunk, in one of three tiers chosen per
+    bucket and dimension by ``B = max|q|²·dim``:
+
+    - ``B < 2⁵³``: float64 (BLAS). Every product and partial sum is an
+      integer below 2⁵³, so float64 holds each exactly in any summation
+      order or blocking — the int64 Gram, bit for bit;
+    - ``2⁵³ ≤ B < 2⁶³``: int64 (numpy's integer loop, no BLAS);
+    - ``B ≥ 2⁶³``: the whole bucket replays in Python ints
+      (``slow_bucket``) and raises on a product/sum outside int64 —
+      the ANSI overflow error the interpreted fold would raise.
 
     BIT-IDENTICAL to the interpreted plan by construction:
 
     - integer addition is order-independent, so the matmul's
       ``Σ qa_i·qb_i`` IS the ``aggregate(zip_with(...))`` fold value
-      wherever the fold is defined; the fast path is guarded by
-      ``max|q|²·dim < 2⁶³`` (beyond it the whole bucket replays in
-      Python ints and raises on a product/sum outside int64 — the
-      ANSI overflow error the interpreted fold would raise);
+      wherever the fold is defined;
     - fold-NULL rows are INERT exactly as in the plan: a NULL array, a
       NULL element (zip_with → NULL product → NULL fold), or a length
       mismatch (zip_with pads → NULL) makes every pair's ``__dot``
@@ -611,7 +617,9 @@ def _gram_dropped_exact(base: DataFrame, id_col: str, t2: int) -> DataFrame:
       plan — exceeds int64) is decided in float64 ONLY when the two
       sides differ by > 1e-9 relative (float error ≤ ~1e-15 relative:
       6 orders of safety); border candidates re-decide in exact Python
-      ints;
+      ints — only for pairs with ``id_a < id_b``, the pairs the plan
+      evaluates, so a self-pair near the Decimal(38,0) capacity does
+      not raise where the plan does not;
     - ``id_a < id_b`` via first-occurrence ranks over the id-sorted
       bucket (strict: duplicate id values never pair, as in the plan).
 
@@ -746,23 +754,32 @@ def _gram_dropped_exact(base: DataFrame, id_col: str, t2: int) -> DataFrame:
                         [n2s[i] for i in idx],
                     )
                     continue
+                if mx * mx * dim < (1 << 53):
+                    # every product and partial sum is an integer below
+                    # 2^53: float64 (BLAS) holds each exactly, in any
+                    # summation order or blocking
+                    Q = Q.astype(np.float64)
                 mm = len(idx)
                 chunk = max(1, CHUNK_CELLS // mm)
                 nfa = n2v.astype(np.float64)
                 hit = np.zeros(mm, dtype=bool)
                 for c0 in range(0, mm, chunk):
                     cols = slice(c0, min(c0 + chunk, mm))
-                    G = Q @ Q[cols].T  # int64 exact under the bound
+                    G = Q @ Q[cols].T  # the int64 Gram, exact under the bound
+                    # j dropped ⟺ ∃ i with rank_i < rank_j and cond
+                    lt = ranks[:, None] < ranks[cols][None, :]
                     pos = G > 0
-                    dotf = G.astype(np.float64)
+                    dotf = G.astype(np.float64, copy=False)
                     lhs = dotf * dotf * 1e4
                     rhs = float(T2) * nfa[:, None] * nfa[cols][None, :]
                     cond = pos & (lhs >= rhs)
                     # exact-replay set: float-border candidates AND
                     # anything within float error of the Decimal(38,0)
                     # capacity (exact_cond raises there, mirroring the
-                    # plan's ANSI overflow)
-                    border = pos & (
+                    # plan's ANSI overflow) — only over the pairs the
+                    # plan's id_a < id_b evaluates, so self, mirrored and
+                    # duplicate-id pairs never raise
+                    border = (pos & lt) & (
                         (np.abs(lhs - rhs) <= 1e-9 * np.maximum(lhs, rhs))
                         | (lhs >= 9.999e37)
                         | (rhs >= 9.999e37)
@@ -775,8 +792,6 @@ def _gram_dropped_exact(base: DataFrame, id_col: str, t2: int) -> DataFrame:
                                 int(n2v[i_]),
                                 int(n2v[c0 + j_]),
                             )
-                    # j dropped ⟺ ∃ i with rank_i < rank_j and cond
-                    lt = ranks[:, None] < ranks[cols][None, :]
                     hit[cols] |= (cond & lt).any(axis=0)
                 dropped |= {sid[k] for k in np.flatnonzero(hit)}
         return pd.DataFrame({id_col: sorted(dropped)})
@@ -799,9 +814,10 @@ def _cosine_dedup_within(
     each ``__bucket`` of ``bucketed``, pairs with cosine ≥ threshold
     collapse to the min id; survivors are returned from ``df``.
 
-    The bucket (LSH band or semantic cluster) bounds the self-join:
-    work is Σ_bucket n_b² — never corpus², and the AQE skew-join splits
-    any hot bucket.
+    The bucket (LSH band or semantic cluster) bounds the pair work:
+    Σ_bucket n_b² — never corpus². Under ``pair_impl="expr"`` the AQE
+    skew-join splits a hot bucket; under the Gram engine (the default
+    of both callers) a bucket is one grouped-map task.
 
     ``pair_impl`` selects the exact-mode pair engine: ``"expr"`` the
     bucket self-join + interpreted per-pair fold, ``"gram"`` the
@@ -921,10 +937,12 @@ def semantic_dedup(
     ivf.kmeans_refine` (``iters=0`` → the deterministic seed rows —
     the engine-reproducible mode the oracle replays); assignment is a
     broadcast of ``n_cells`` rows against one corpus scan (no corpus
-    shuffle); the within-cell pair join + min-id collapse is the same
-    Σ n_cell² machinery as :func:`embedding_cosine_dedup`, with AQE
-    splitting any skewed cell. ``exact=True`` uses the integer-exact
-    cosine threshold so every engine keeps the identical survivor set.
+    shuffle); the within-cell pair check + min-id collapse is the same
+    Σ n_cell² machinery as :func:`embedding_cosine_dedup`. AQE splits
+    a skewed cell only under ``pair_impl="expr"``; under the default
+    Gram engine a cell is one grouped-map task. ``exact=True`` uses the
+    integer-exact cosine threshold so every engine keeps the identical
+    survivor set.
 
     SemDeDup keeps one representative per near-dup group; this
     implementation keeps the min id (deterministic, join-free).

@@ -339,13 +339,12 @@ def assign_cells_exact(
 
 
 def ivf_centroids(corpus: DataFrame, n_cells: int, corpus_id: str = "vec_id", corpus_vec: str = "embedding") -> DataFrame:
-    # Cell numbering via ids.attach_dense_rank_bounded: the frame is
-    # bounded by limit(n_cells), so the one-exchange single-partition
-    # Arrow index pass is strictly cheaper than a distributed ranking
-    # (assign_stable_ids' eager pin + offsets collect measured ~3x on
-    # emb_semantic_dedup at sf0.1) and emits no WindowExec warning. Its
-    # key check rejects duplicate vec_ids among the seeds, whose cell
-    # numbers would otherwise depend on row arrival order.
+    # Cell numbering is a JVM row_number over the limit(n_cells) output:
+    # the limit leaves one sorted partition, so the window adds no
+    # exchange and no sort, and Spark's "No Partition Defined for Window
+    # operation" warning is expected here — its input is at most n_cells
+    # rows. Seeds that tie on vec_id raise at action time, because their
+    # cell numbers would otherwise depend on row arrival order.
     # The assert keeps the frame broadcastable: centroid tables join
     # every probe, so a huge n_cells is wrong twice.
     if n_cells > 1_000_000:
@@ -361,15 +360,31 @@ def ivf_centroids(corpus: DataFrame, n_cells: int, corpus_id: str = "vec_id", co
     c = corpus.filter(
         F.col(corpus_vec).isNotNull() & (F.size(F.col(corpus_vec)) > 0)
     ).select(F.col(corpus_id).alias("vec_id"), F.col(corpus_vec).alias("__cvec0"))
-    from meds_transforms_spark.operators.ids import attach_dense_rank_bounded
-
-    seeds = c.orderBy("vec_id").limit(n_cells)
-    return attach_dense_rank_bounded(
-        seeds, order_cols=["vec_id"], id_name="__cell", start=1
-    ).select(
-        F.col("__cell").cast("int").alias("__cell"),
-        F.col("__cvec0").alias("__cvec"),
-        l2_norm(F.col("__cvec0")).alias("__cnorm"),
+    w = W.orderBy("vec_id")
+    cell = F.row_number().over(w)
+    # `lag` is NULL on the first row, so a bare `<=>` would reject a
+    # lone NULL vec_id; the first row never ties
+    tied = (cell > 1) & F.lag("vec_id").over(w).eqNullSafe(F.col("vec_id"))
+    return (
+        c.orderBy("vec_id")
+        .limit(n_cells)
+        .select(
+            F.when(
+                tied,
+                F.raise_error(
+                    F.format_string(
+                        "ivf_centroids: seeds are not unique on vec_id; "
+                        "duplicate: %s",
+                        F.col("vec_id"),
+                    )
+                ),
+            )
+            .otherwise(cell)
+            .cast("int")
+            .alias("__cell"),
+            F.col("__cvec0").alias("__cvec"),
+            l2_norm(F.col("__cvec0")).alias("__cnorm"),
+        )
     )
 
 

@@ -293,7 +293,8 @@ def test_gram_pair_impl_matches_expr(spark):
     real embeddings, adversarial rows (NULL vector, NULL element,
     ragged dims, empty arrays, duplicate ids), an exact
     threshold-boundary tie (cos == threshold decided on the border
-    path), and a magnitude that exceeds the int64 fast-path bound
+    path), a self-pair near the Decimal(38,0) capacity, both edges of
+    the float64 tier, and a magnitude that exceeds the int64 bound
     (whole-bucket exact replay)."""
     from meds_transforms_spark.operators.dedup import (
         embedding_cosine_dedup,
@@ -353,6 +354,41 @@ def test_gram_pair_impl_matches_expr(spark):
     assert got["expr"] == got["gram"], got
     # ids 2 (dup of 1) and 5 (dup of 4) dropped; inert rows kept
     assert got["gram"] == [1, 3, 4, 6, 7], got
+
+    # id 1's self-dot (≈1.15e17) squares past Decimal(38,0), but the
+    # plan's id_a < id_b never evaluates a self-pair, so neither engine
+    # raises; max|q|²·dim ≈ 1.15e17 also puts the bucket in the int64 tier
+    df_cap = spark.createDataFrame(
+        [
+            (1, [6000.0] * 32),
+            (2, [1.0] * 32),
+            (3, [1.0] * 31 + [1.01]),
+            (4, [-1.0] * 32),
+        ],
+        "vec_id long, emb_d array<double>",
+    )
+    # near-parallel pairs with max|q|²·dim just below 2^53 (float64 tier)
+    # and just above it (int64 tier)
+    df_below = spark.createDataFrame(
+        [(1, [4700.0] * 4), (2, [4700.0] * 3 + [4699.0])],
+        "vec_id long, emb_d array<double>",
+    )
+    df_above = spark.createDataFrame(
+        [(1, [4800.0] * 4), (2, [4800.0] * 3 + [4799.0])],
+        "vec_id long, emb_d array<double>",
+    )
+    for frame, want in ((df_cap, [1, 4]), (df_below, [1]), (df_above, [1])):
+        got = {
+            impl: sorted(
+                r.vec_id
+                for r in embedding_cosine_dedup(
+                    frame, vec_col="emb_d", id_col="vec_id", exact=True,
+                    num_planes=1, pair_impl=impl,
+                ).collect()
+            )
+            for impl in ("expr", "gram")
+        }
+        assert got["expr"] == got["gram"] == want, got
 
     # magnitudes past the int64 fast-path bound: dot² also exceeds
     # Decimal(38,0), so the INTERPRETED plan raises an ANSI overflow —

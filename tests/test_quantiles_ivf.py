@@ -151,3 +151,33 @@ def test_approx_methods_recall_floor(spark):
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
     assert recall >= 0.5, recall
+
+
+def test_ivf_centroids_seed_numbering(spark):
+    """Cells are numbered 1..n_cells by vec_id in one job (a window over
+    the limit's one sorted partition); a lone NULL vec_id sorts first
+    and takes cell 1; seeds that tie on vec_id would get arrival-order
+    cell numbers, so collecting them raises."""
+    import pytest
+
+    from meds_transforms_spark.operators.ivf import ivf_centroids
+    from tests.conftest import jobs_started
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    rows, jobs = jobs_started(spark, ivf_centroids(emb, 16).collect)
+    assert sorted(r["__cell"] for r in rows) == list(range(1, 17))
+    assert len(jobs) == 1, jobs
+
+    schema = "vec_id long, embedding array<double>"
+    nulls = spark.createDataFrame(
+        [(None, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])], schema
+    )
+    got = sorted((r["__cell"], r["__cvec"]) for r in ivf_centroids(nulls, 3).collect())
+    assert got == [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (3, [1.0, 1.0])]
+
+    tied = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (1, [0.0, 1.0]), (3, [1.0, 1.0])], schema
+    )
+    cents = ivf_centroids(tied, 2)  # lazy: the guard fires at action time
+    with pytest.raises(Exception, match="not unique on vec_id"):
+        cents.collect()
