@@ -7,6 +7,11 @@ also be the right call on a 1000-executor cluster:
 - Arrow transfer on (Pandas-UDF operators move data in columnar batches).
 - Shuffle partitions sized to cores locally; on a real cluster AQE's
   coalescing makes the static number mostly irrelevant.
+- Local masters start Python workers from ``worker_daemon``, which skips
+  the per-task re-read of unchanged zip archives (pyspark.zip) that
+  ``importlib.invalidate_caches()`` forces on every task. Other masters
+  keep Spark's daemon: a ``--py-files`` package joins ``sys.path`` only
+  per task there, so a daemon inside it could not start.
 """
 
 from __future__ import annotations
@@ -44,7 +49,8 @@ def get_spark(
     # the submit host's core count (AQE coalescing only merges
     # DOWNWARD from the initial number, never raises it). Non-local
     # masters keep Spark's default unless the caller sets one.
-    if shuffle_partitions is None and master.startswith("local"):
+    local = master.startswith("local")
+    if shuffle_partitions is None and local:
         shuffle_partitions = cpus
     builder = (
         SparkSession.builder.master(master)
@@ -96,6 +102,10 @@ def get_spark(
     # Python workers to warm), everything else inside noise. No net
     # win, and it perturbs every measured plan — at real scale files
     # exceed 128 MB and the default splitting already parallelizes.
+    if local:
+        builder = builder.config(
+            "spark.python.daemon.module", "meds_transforms_spark.worker_daemon"
+        )
     if shuffle_partitions is not None:
         builder = builder.config(
             "spark.sql.shuffle.partitions", str(int(shuffle_partitions))

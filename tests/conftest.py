@@ -23,6 +23,8 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "4g")
+        # the Python worker daemon get_spark sets for local masters
+        .config("spark.python.daemon.module", "meds_transforms_spark.worker_daemon")
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")
