@@ -584,220 +584,214 @@ def embedding_cosine_dedup(
     )
 
 
-def _gram_dropped_exact(base: DataFrame, id_col: str, t2: int) -> DataFrame:
-    """Dropped ids of the exact-mode pair stage via ONE per-bucket Gram
-    matmul (round-11, guide §8 "move big rows once"): the bucket
-    self-join form materializes O(Σ n_b²) pair rows each carrying BOTH
-    quantized vectors, and evaluates an interpreted per-pair fold over
-    every one; here each vector crosses one exchange ONCE
-    (groupBy(__bucket).applyInPandas) and the within-bucket dot matrix
-    is one matmul per column chunk, in one of three tiers chosen per
-    bucket and dimension by ``B = max|q|²·dim``:
+# A bucket's dot matrix is computed this many cells (m rows × a column
+# chunk) at a time, which bounds the kernel's memory under a hot bucket.
+_GRAM_CHUNK_CELLS = 4 << 20
+_LONG_MAX = (1 << 63) - 1
+_DEC_MAX = 10**38  # Decimal(38,0) capacity — the plan's ANSI limit
 
-    - ``B < 2⁵³``: float64 (BLAS). Every product and partial sum is an
-      integer below 2⁵³, so float64 holds each exactly in any summation
-      order or blocking — the int64 Gram, bit for bit;
-    - ``2⁵³ ≤ B < 2⁶³``: int64 (numpy's integer loop, no BLAS);
-    - ``B ≥ 2⁶³``: the whole bucket replays in Python ints
-      (``slow_bucket``) and raises on a product/sum outside int64 —
-      the ANSI overflow error the interpreted fold would raise.
 
-    BIT-IDENTICAL to the interpreted plan by construction:
+def _exact_cond(dot: int, na: int, nb: int, t2: int) -> bool:
+    """Exact replay of ``__dot > 0 AND dot²·10⁴ ≥ t2·na·nb`` in
+    decimal(38,0) — INCLUDING the ANSI overflow raise the plan throws
+    when an intermediate product exceeds Decimal(38,0) (evaluated only
+    when ``__dot > 0``, matching the conjunction's short-circuit)."""
+    if dot <= 0:
+        return False
+    for v in (sq := dot * dot, lhs := sq * 10_000, r1 := t2 * na, rhs := r1 * nb):
+        if v >= _DEC_MAX:
+            raise ArithmeticError(
+                f"{v} cannot be represented as Decimal(38, 0) (ANSI)"
+            )
+    return lhs >= rhs
+
+
+def _check_norm_fold(q) -> None:
+    """The plan's ``aggregate(__q, 0L, (acc, v) -> acc + v*v)`` raises
+    ARITHMETIC_OVERFLOW once its (monotone) sum passes Long.MAX."""
+    if sum(int(v) ** 2 for v in q) > _LONG_MAX:
+        raise ArithmeticError(
+            "[ARITHMETIC_OVERFLOW] long overflow in the squared norm of a "
+            "quantized vector (ANSI)"
+        )
+
+
+def _quantize(x):
+    """``CAST(floor(CAST(x AS double) * 10000 + 0.5) AS long)`` bit for
+    bit: the same IEEE double ops, then the JVM's saturating
+    double→long (NaN → 0, ±inf and out-of-range → Long.MIN/MAX)."""
+    import numpy as np
+
+    f = np.floor(x * 1e4 + 0.5)
+    q = np.nan_to_num(np.maximum(f, -(2.0**63)), nan=0.0, posinf=0.0).astype(np.int64)
+    q[f >= 2.0**63] = _LONG_MAX
+    return q
+
+
+def _gram_bucket_dropped(ids, vecs, t2: int, chunk_cells: int):
+    """The ids of one bucket that the exact pair plan drops (see
+    :func:`_gram_dropped_exact`). ``ids`` is an Arrow array, ``vecs``
+    an Arrow list array of the same length."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(ids)
+    # the join's inferred isnotnull filters: a NULL id or vector is
+    # never folded, so it neither pairs nor raises
+    live = ~(ids.is_null().to_numpy(zero_copy_only=False)
+             | vecs.is_null().to_numpy(zero_copy_only=False))
+    off = vecs.offsets.to_numpy()
+    lens = np.diff(off)
+    vals = vecs.values
+    x = pc.cast(vals, pa.float64()).to_numpy(zero_copy_only=False)
+    if vals.null_count:
+        # a NULL element NULLs every fold through it (inert row), but
+        # the plan has already folded the squares before it
+        isn = vals.is_null().to_numpy(zero_copy_only=False)
+        cs = np.concatenate(([0], np.cumsum(isn)))
+        for r in np.flatnonzero(live & (cs[off[1:]] > cs[off[:-1]])):
+            first = off[r] + int(np.argmax(isn[off[r]:off[r + 1]]))
+            _check_norm_fold(_quantize(x[off[r]:first]))
+            live[r] = False
+
+    # first-occurrence ranks over one sort of the ids: equal ids tie
+    # (never pair), NaN ids sort above all others and tie, as in Spark
+    order = pc.sort_indices(ids, null_placement="at_end")
+    s = ids.take(order)
+    new = pc.fill_null(pc.not_equal(s[1:], s[:-1]), False)
+    new = new.to_numpy(zero_copy_only=False)
+    if pa.types.is_floating(ids.type):
+        nan = pc.fill_null(pc.is_nan(s), False).to_numpy(zero_copy_only=False)
+        new &= ~(nan[1:] & nan[:-1])
+    starts = np.where(np.concatenate(([True], new)), np.arange(n), 0)
+    ranks = np.empty(n, dtype=np.int64)
+    ranks[order.to_numpy()] = np.maximum.accumulate(starts)
+
+    T2 = int(t2)
+    dropped = []
+    for d in np.unique(lens[live]):
+        rows = np.flatnonzero(live & (lens == d))
+        Q = _quantize(x[off[rows][:, None] + np.arange(d)])
+        qf = Q.astype(np.float64)
+        for r in np.flatnonzero(np.einsum("ij,ij->i", qf, qf) >= 2.0**62):
+            _check_norm_fold(Q[r])
+        # int64 wraps modulo 2⁶⁴, so a sum that fits (checked) is exact
+        n2 = np.einsum("ij,ij->i", Q, Q)
+        nz = n2 > 0  # a zero vector dots 0 with everything: inert
+        if nz.sum() < 2:
+            continue
+        rows, Q, qf, n2, rk = rows[nz], Q[nz], qf[nz], n2[nz], ranks[rows[nz]]
+        nf = n2.astype(np.float64)
+        if n2.max() < 1 << 53:
+            # Cauchy–Schwarz bounds every product and partial sum by
+            # max n2 < 2⁵³: float64 (BLAS) holds each exactly, in any
+            # summation order or blocking — the int64 Gram, bit for bit
+            Q = qf
+        # candidate cut with 1e-8 relative slack (float error is
+        # ~1e-15), a superset of both the float accept and the border
+        # replay below; a bucket whose sides can reach the Decimal(38,0)
+        # capacity (Cauchy–Schwarz: side ≤ max(10⁴, t2)·max n2²) keeps
+        # every pair, so the replay sees each one the plan would raise on
+        cut = T2 * (1 - 1e-8)
+        if max(10_000, T2) * nf.max() ** 2 >= 9.99e37:
+            cut = -np.inf
+        m = len(rows)
+        chunk = max(1, chunk_cells // m)
+        hit = np.zeros(m, dtype=bool)
+        row_w, col_w = 1e4 / nf, cut * nf
+        for c0 in range(0, m, chunk):
+            G = Q @ Q[c0:c0 + chunk].T
+            S = np.square(G, dtype=np.float64)
+            S *= row_w[:, None]
+            ci, cj = np.divmod(
+                np.flatnonzero(S >= col_w[None, c0:c0 + chunk]), G.shape[1]
+            )
+            g = G[ci, cj]
+            cj += c0
+            # the plan's id_a < id_b and __dot > 0
+            keep = (rk[ci] < rk[cj]) & (g > 0)
+            ci, cj, g = ci[keep], cj[keep], g[keep]
+            gf = g.astype(np.float64)
+            lhs = gf * gf * 1e4
+            rhs = float(T2) * nf[ci] * nf[cj]
+            cond = lhs >= rhs
+            # float-border pairs and anything within float error of the
+            # Decimal(38,0) capacity re-decide in exact ints
+            border = (
+                (np.abs(lhs - rhs) <= 1e-9 * np.maximum(lhs, rhs))
+                | (lhs >= 9.999e37)
+                | (rhs >= 9.999e37)
+            )
+            for k in np.flatnonzero(border):
+                cond[k] = _exact_cond(int(g[k]), int(n2[ci[k]]), int(n2[cj[k]]), T2)
+            hit[cj[cond]] = True
+        dropped.append(rk[hit])
+    if not dropped:
+        return ids.slice(0, 0)
+    return s.take(np.unique(np.concatenate(dropped)))
+
+
+def _gram_dropped_exact(
+    base: DataFrame, id_col: str, vec_col: str, t2: int
+) -> DataFrame:
+    """Dropped ids of the exact-mode pair stage, from ONE grouped Arrow
+    map over ``(id, __bucket, vec)``: each vector crosses one exchange
+    once, and a bucket's pairs are decided from its Gram matrix, where
+    the bucket self-join form materializes O(Σ n_b²) pair rows each
+    carrying both quantized vectors through an interpreted fold.
+
+    The kernel quantizes (:func:`_quantize`: NaN → 0, ±inf and
+    out-of-range saturate to Long.MIN/MAX) and folds ``n2 = Σq²``
+    itself, raising ARITHMETIC_OVERFLOW for any row whose ``n2`` passes
+    int64 — singleton buckets included — as the plan's ANSI fold does.
+
+    Each (bucket, dim) group is one matrix, built from the Arrow list
+    buffers, and its dot matrix is one matmul per column chunk of
+    ``_GRAM_CHUNK_CELLS`` cells: float64 (BLAS) when ``max n2 < 2⁵³``,
+    else numpy's int64 loop. By Cauchy–Schwarz every partial dot is
+    bounded by ``max n2``, so both are exact, and the plan's dot fold
+    cannot overflow once every ``n2`` fits.
+
+    BIT-IDENTICAL to the interpreted plan (``pair_impl="expr"``):
 
     - integer addition is order-independent, so the matmul's
-      ``Σ qa_i·qb_i`` IS the ``aggregate(zip_with(...))`` fold value
-      wherever the fold is defined;
-    - fold-NULL rows are INERT exactly as in the plan: a NULL array, a
-      NULL element (zip_with → NULL product → NULL fold), or a length
-      mismatch (zip_with pads → NULL) makes every pair's ``__dot``
-      NULL → both filter conjuncts false → the row neither drops nor
-      is dropped; empty arrays fold to the init 0 → ``__dot > 0``
-      false → inert;
-    - the threshold ``10⁴·dot² ≥ t2·‖a‖²·‖b‖²`` (decimal(38,0) in the
-      plan — exceeds int64) is decided in float64 ONLY when the two
-      sides differ by > 1e-9 relative (float error ≤ ~1e-15 relative:
-      6 orders of safety); border candidates re-decide in exact Python
-      ints — only for pairs with ``id_a < id_b``, the pairs the plan
-      evaluates, so a self-pair near the Decimal(38,0) capacity does
-      not raise where the plan does not;
-    - ``id_a < id_b`` via first-occurrence ranks over the id-sorted
-      bucket (strict: duplicate id values never pair, as in the plan).
+      ``Σ qa_i·qb_i`` IS the ``aggregate(zip_with(...))`` fold value;
+    - fold-NULL rows are INERT exactly as in the plan: a NULL id, a
+      NULL array, a NULL element, or a length mismatch (each dim is
+      its own matrix) never pairs; an empty or all-zero vector dots to
+      0, never ``> 0``;
+    - ``id_a < id_b`` via first-occurrence ranks over one sort of the
+      Arrow id column (duplicate ids never pair; NaN ids rank above
+      all others and tie, as in Spark's ordering);
+    - only candidate pairs, ``10⁴·G² ≥ t2·na·nb·(1−1e-8)``, are
+      decided: in float64 when the two sides differ by > 1e-9 relative,
+      else — and near the Decimal(38,0) capacity — in exact Python ints
+      (:func:`_exact_cond`), which raise where the plan's decimal
+      product overflows.
 
     Skew: a hot bucket is ONE task here (no AQE pair-join split), but
-    the working set is chunked to O(m·4M) Gram cells, and both callers
-    bound bucket size by construction (semantic cells ∝ N; hyperplane
-    buckets). Memory per task stays O(bucket vectors + one chunk)."""
-    import numpy as np
-    import pandas as pd
+    the working set is chunked, and both callers bound bucket size by
+    construction (semantic cells ∝ N; hyperplane buckets). Memory per
+    task stays O(bucket vectors + one chunk)."""
+    import pyarrow as pa
 
     id_ddl = base.select(id_col).schema[0].dataType.simpleString()
-    src = base.select(id_col, "__bucket", "__q", "__n2")
-    T2 = int(t2)
-    CHUNK_CELLS = 4 << 20
-    DEC_MAX = 10**38  # Decimal(38,0) capacity — the plan's ANSI limit
+    chunk_cells = _GRAM_CHUNK_CELLS  # the workers see the caller's value
 
-    def exact_cond(dot: int, na: int, nb: int) -> bool:
-        """Exact replay of ``__dot > 0 AND dot²·10⁴ ≥ t2·na·nb`` in
-        decimal(38,0) — INCLUDING the ANSI overflow raise the plan
-        throws when an intermediate product exceeds Decimal(38,0)
-        (evaluated only when ``__dot > 0``, matching the conjunction's
-        short-circuit)."""
-        if dot <= 0:
-            return False
-        sq = dot * dot
-        if sq >= DEC_MAX:
-            raise ArithmeticError(
-                f"{sq} cannot be represented as Decimal(38, 0) (ANSI)"
-            )
-        lhs = sq * 10_000
-        if lhs >= DEC_MAX:
-            raise ArithmeticError(
-                f"{lhs} cannot be represented as Decimal(38, 0) (ANSI)"
-            )
-        r1 = T2 * na
-        if r1 >= DEC_MAX:
-            raise ArithmeticError(
-                f"{r1} cannot be represented as Decimal(38, 0) (ANSI)"
-            )
-        rhs = r1 * nb
-        if rhs >= DEC_MAX:
-            raise ArithmeticError(
-                f"{rhs} cannot be represented as Decimal(38, 0) (ANSI)"
-            )
-        return lhs >= rhs
+    def kernel(table):
+        out = _gram_bucket_dropped(
+            table.column(id_col).combine_chunks(),
+            table.column(vec_col).combine_chunks(),
+            t2,
+            chunk_cells,
+        )
+        return pa.table({id_col: out})
 
-    def slow_bucket(ids, qs, n2s):
-        """Exact per-pair replay (Python ints) — pathological buckets
-        only (weird dtypes or int64-unsafe magnitudes)."""
-        out = set()
-        m = len(ids)
-        cand = []
-        for i in range(m):
-            q = qs[i]
-            if q is None or n2s[i] is None:
-                continue
-            if ids[i] is None or (
-                isinstance(ids[i], float) and ids[i] != ids[i]
-            ):
-                continue  # NULL id: inert (id_a < id_b is NULL)
-            q = list(q)
-            if any(x is None or (isinstance(x, float) and x != x) for x in q):
-                continue
-            cand.append((i, [int(x) for x in q]))
-        for ai in range(len(cand)):
-            i, qa = cand[ai]
-            for bj in range(len(cand)):
-                j, qb = cand[bj]
-                if ids[i] == ids[j] or len(qa) != len(qb):
-                    continue
-                acc = 0
-                for x, y in zip(qa, qb):
-                    p = x * y
-                    if not (-(1 << 63) <= p < (1 << 63)):
-                        raise ArithmeticError("pair dot: long overflow (ANSI)")
-                    acc += p
-                    if not (-(1 << 63) <= acc < (1 << 63)):
-                        raise ArithmeticError("pair dot: long overflow (ANSI)")
-                if exact_cond(acc, int(n2s[i]), int(n2s[j])):
-                    out.add(max(ids[i], ids[j]))
-        return out
-
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        m = len(pdf)
-        ids = pdf[id_col].tolist()
-        qs = pdf["__q"].tolist()
-        n2s = [None if pd.isna(v) else int(v) for v in pdf["__n2"].tolist()]
-        groups: dict[int, list[int]] = {}
-        weird = False
-        for i in range(m):
-            q, n2 = qs[i], n2s[i]
-            if q is None or n2 is None:
-                continue  # fold-NULL row: inert
-            if ids[i] is None or (
-                isinstance(ids[i], float) and ids[i] != ids[i]
-            ):
-                continue  # NULL id: id_a < id_b is NULL → inert
-            arr = np.asarray(q)
-            if arr.dtype.kind not in "iu":
-                if arr.dtype.kind == "f" and np.isnan(arr).any():
-                    continue  # NULL element → NULL fold: inert
-                weird = True  # shouldn't happen for array<long>; replay
-                break
-            if len(arr) == 0:
-                continue  # fold init 0, never > 0: inert
-            groups.setdefault(len(arr), []).append(i)
-        dropped: set = set()
-        if weird:
-            dropped = slow_bucket(ids, qs, n2s)
-        else:
-            for dim, idx in groups.items():
-                if len(idx) < 2:
-                    continue
-                sub_ids = [ids[i] for i in idx]
-                order = sorted(range(len(idx)), key=lambda k: sub_ids[k])
-                idx = [idx[k] for k in order]
-                sid = [sub_ids[k] for k in order]
-                # first-occurrence rank: strict id order (dup ids tie)
-                ranks = np.empty(len(idx), dtype=np.int64)
-                r = -1
-                for k in range(len(idx)):
-                    if k == 0 or sid[k] != sid[k - 1]:
-                        r = k
-                    ranks[k] = r
-                Q = np.stack([np.asarray(qs[i], dtype=np.int64) for i in idx])
-                n2v = np.array([n2s[i] for i in idx], dtype=np.int64)
-                mx = int(np.abs(Q).max()) if Q.size else 0
-                if mx and mx * mx * dim >= (1 << 63):
-                    dropped |= slow_bucket(
-                        [ids[i] for i in idx],
-                        [qs[i] for i in idx],
-                        [n2s[i] for i in idx],
-                    )
-                    continue
-                if mx * mx * dim < (1 << 53):
-                    # every product and partial sum is an integer below
-                    # 2^53: float64 (BLAS) holds each exactly, in any
-                    # summation order or blocking
-                    Q = Q.astype(np.float64)
-                mm = len(idx)
-                chunk = max(1, CHUNK_CELLS // mm)
-                nfa = n2v.astype(np.float64)
-                hit = np.zeros(mm, dtype=bool)
-                for c0 in range(0, mm, chunk):
-                    cols = slice(c0, min(c0 + chunk, mm))
-                    G = Q @ Q[cols].T  # the int64 Gram, exact under the bound
-                    # j dropped ⟺ ∃ i with rank_i < rank_j and cond
-                    lt = ranks[:, None] < ranks[cols][None, :]
-                    pos = G > 0
-                    dotf = G.astype(np.float64, copy=False)
-                    lhs = dotf * dotf * 1e4
-                    rhs = float(T2) * nfa[:, None] * nfa[cols][None, :]
-                    cond = pos & (lhs >= rhs)
-                    # exact-replay set: float-border candidates AND
-                    # anything within float error of the Decimal(38,0)
-                    # capacity (exact_cond raises there, mirroring the
-                    # plan's ANSI overflow) — only over the pairs the
-                    # plan's id_a < id_b evaluates, so self, mirrored and
-                    # duplicate-id pairs never raise
-                    border = (pos & lt) & (
-                        (np.abs(lhs - rhs) <= 1e-9 * np.maximum(lhs, rhs))
-                        | (lhs >= 9.999e37)
-                        | (rhs >= 9.999e37)
-                    )
-                    if border.any():
-                        bi, bj = np.nonzero(border)
-                        for i_, j_ in zip(bi, bj):
-                            cond[i_, j_] = exact_cond(
-                                int(G[i_, j_]),
-                                int(n2v[i_]),
-                                int(n2v[c0 + j_]),
-                            )
-                    hit[cols] |= (cond & lt).any(axis=0)
-                dropped |= {sid[k] for k in np.flatnonzero(hit)}
-        return pd.DataFrame({id_col: sorted(dropped)})
-
-    return src.groupby("__bucket").applyInPandas(
-        process, schema=f"`{id_col}` {id_ddl}"
+    return (
+        base.select(id_col, "__bucket", vec_col)
+        .groupBy("__bucket")
+        .applyInArrow(kernel, schema=f"`{id_col}` {id_ddl}")
     )
 
 
@@ -820,12 +814,20 @@ def _cosine_dedup_within(
     of both callers) a bucket is one grouped-map task.
 
     ``pair_impl`` selects the exact-mode pair engine: ``"expr"`` the
-    bucket self-join + interpreted per-pair fold, ``"gram"`` the
-    bit-identical per-bucket Gram matmul
-    (:func:`_gram_dropped_exact`)."""
+    bucket self-join + interpreted per-pair fold over the quantized
+    ``__q``/``__n2`` columns (the reference), ``"gram"`` the
+    bit-identical per-bucket Arrow Gram kernel
+    (:func:`_gram_dropped_exact`), which quantizes and folds the norms
+    itself, so its plan carries only ``(id, __bucket, vec)``."""
     from meds_transforms_spark.operators.similarity import cosine_similarity
 
     if exact:
+        t2 = int(round(threshold * threshold * 10_000))
+        if pair_impl == "gram":
+            dropped = _gram_dropped_exact(
+                bucketed, id_col, vec_col, t2
+            ).localCheckpoint(eager=False)
+            return df.join(dropped, id_col, "left_anti")
         QUANT = 10_000
         qvec = F.transform(
             F.col(vec_col),
@@ -837,12 +839,6 @@ def _cosine_dedup_within(
         base = bucketed.withColumn("__q", qvec).withColumn(
             "__n2", norm2(F.col("__q"))
         )
-        t2 = int(round(threshold * threshold * 10_000))
-        if pair_impl == "gram":
-            dropped = _gram_dropped_exact(base, id_col, t2).localCheckpoint(
-                eager=False
-            )
-            return df.join(dropped, id_col, "left_anti")
         a = base.select(
             F.col(id_col).alias("id_a"), F.col("__q").alias("__qa"),
             F.col("__n2").alias("__na"), "__bucket",
@@ -940,9 +936,11 @@ def semantic_dedup(
     shuffle); the within-cell pair check + min-id collapse is the same
     Σ n_cell² machinery as :func:`embedding_cosine_dedup`. AQE splits
     a skewed cell only under ``pair_impl="expr"``; under the default
-    Gram engine a cell is one grouped-map task. ``exact=True`` uses the
-    integer-exact cosine threshold so every engine keeps the identical
-    survivor set.
+    Gram engine (:func:`_gram_dropped_exact`) a cell is one grouped
+    Arrow map task that quantizes its vectors itself and decides only
+    the candidate pairs near or above the threshold, in exact float64
+    or int64 arithmetic. ``exact=True`` uses the integer-exact cosine
+    threshold so every engine keeps the identical survivor set.
 
     SemDeDup keeps one representative per near-dup group; this
     implementation keeps the min id (deterministic, join-free).

@@ -291,7 +291,12 @@ class Pipeline:
         self, df: DataFrame, idx: int, name: str, is_metadata: bool
     ) -> DataFrame:
         if not self.checkpoint_dir:
-            # a codes table is read by several consumers; a data frame once
+            # Pin a codes table: several consumers read it. A data frame
+            # that a metadata stage fits on has two consumers too (the
+            # fit and the next data stage both re-scan it), but stays
+            # lazy: a localCheckpoint drops its hashpartitioning, so the
+            # write coalesces to one task, and persist() would serve the
+            # next run's identical plan from the old cache.
             return df.localCheckpoint(eager=False) if is_metadata else df
         path = os.path.join(self.checkpoint_dir, f"{idx:02d}_{name}")
         write_parquet(df, path)

@@ -1,20 +1,27 @@
-"""Round-11 A/B: the exact cosine-dedup PAIR stage, interpreted fold
-vs an Arrow int64-dot kernel — the VERDICT-r10 item 5 retrial at scale.
+"""A/B of the exact cosine-dedup PAIR stage at scale: the interpreted
+per-pair fold, a per-pair Arrow int64-dot kernel, and the per-bucket
+Arrow Gram kernel that ``pair_impl="gram"`` ships.
 
-Isolates the candidate-pair dot from assignment/bucketing: N synthetic
-64-dim vectors, __bucket = id % B, so candidate pairs ≈ N·(N/B)/2. Both
-arms compute identical integers (integer sums are order-independent),
+Isolates the pair stage from assignment/bucketing: N synthetic 64-dim
+vectors, __bucket = id % B, so candidate pairs ≈ N·(N/B)/2. All arms
+decide the identical integers (integer sums are order-independent),
 verified by survivor-count equality.
 
-MEASURED (2026-08-18, local[32], N=100k, B=500 → ~10M pairs, 3 passes):
-    expr    min  6.93 s   (interpreted aggregate(zip_with) fold, JVM)
-    kernel  min 11.30 s   (mapInArrow int64 einsum)  — 1.6× WORSE
-Same survivors (35 501). The pair stream duplicates both q-vectors per
-pair, so the kernel ships ~10 GB across the Python boundary to save
-0.64G integer MACs — boundary-bound, exactly why the round-10 bench-
-scale revert also holds at scale. The interpreted fold stays the
-shipped path; a per-bucket Gram-matrix shape (ship each vector once
-per bucket, not once per pair) is the only formulation that beats it.
+- ``expr``: the bucket self-join + ``aggregate(zip_with(...))`` fold
+  over precomputed ``__q``/``__n2`` columns (``pair_impl="expr"``).
+- ``kernel``: the same self-join, with the dot in a ``mapInArrow``
+  int64 einsum. The pair stream duplicates both q-vectors per pair.
+- ``gram``: ``operators.dedup._gram_dropped_exact`` over
+  ``(vec_id, __bucket, emb_d)``: one grouped Arrow map per bucket that
+  quantizes in the kernel and decides only candidate pairs. Each vector
+  crosses the Python boundary once. This is the baseline for skew work
+  on the Gram engine (tiling a hot bucket).
+
+MEASURED before the Gram engine existed (local[32], N=100k, B=500 →
+~10M pairs, 3 passes): expr min 6.93 s, kernel min 11.30 s (1.6×
+worse, boundary-bound: ~10 GB crosses the Python boundary to save 0.64G
+integer MACs), same survivors (35 501). The gram arm has not been
+measured at this scale yet.
 
 Usage: N=100000 B=500 RUNS=3 python scripts/scale_pair_stage_ab.py
 """
@@ -94,6 +101,14 @@ def survivors(df, scored):
     return df.join(dropped, "vec_id", "left_anti")
 
 
+def gram_survivors(df, base):
+    from meds_transforms_spark.operators.dedup import _gram_dropped_exact
+
+    t2 = int(round(THRESHOLD * THRESHOLD * 10_000))
+    dropped = _gram_dropped_exact(base, "vec_id", "emb_d", t2)
+    return df.join(dropped, "vec_id", "left_anti")
+
+
 def main():
     from meds_transforms_spark import get_spark
 
@@ -123,16 +138,18 @@ def main():
     )
     print("rows:", base.count())
     df = base.select("vec_id", "emb_d")
-    arms = {"expr": dot_expr, "kernel": dot_kernel}
+    arms = {
+        "expr": lambda: survivors(df, dot_expr(pair_candidates(base))),
+        "kernel": lambda: survivors(df, dot_kernel(pair_candidates(base))),
+        "gram": lambda: gram_survivors(df, base),
+    }
     res = {a: [] for a in arms}
     for _ in range(RUNS):
         for arm, fn in arms.items():
             t0 = time.time()
-            survivors(df, fn(pair_candidates(base))).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            fn().write.format("noop").mode("overwrite").save()
             res[arm].append(round(time.time() - t0, 3))
-    counts = {a: survivors(df, fn(pair_candidates(base))).count() for a, fn in arms.items()}
+    counts = {a: fn().count() for a, fn in arms.items()}
     for arm, ws in res.items():
         ws2 = sorted(ws)
         print(

@@ -288,14 +288,15 @@ def test_assign_cells_exact_matches_hof(spark):
 
 
 def test_gram_pair_impl_matches_expr(spark):
-    """pair_impl="gram" (round-11 per-bucket Gram matmul) returns the
+    """pair_impl="gram" (the per-bucket Arrow Gram kernel) returns the
     IDENTICAL survivor set as the interpreted per-pair fold, across
     real embeddings, adversarial rows (NULL vector, NULL element,
     ragged dims, empty arrays, duplicate ids), an exact
     threshold-boundary tie (cos == threshold decided on the border
     path), a self-pair near the Decimal(38,0) capacity, both edges of
-    the float64 tier, and a magnitude that exceeds the int64 bound
-    (whole-bucket exact replay)."""
+    the float64 tier, a Decimal(38,0) overflow, NaN and NULL ids,
+    all-regular buckets with string ids and float32 input, and raises
+    where the plan's quantized norm fold overflows."""
     from meds_transforms_spark.operators.dedup import (
         embedding_cosine_dedup,
         semantic_dedup,
@@ -405,3 +406,101 @@ def test_gram_pair_impl_matches_expr(spark):
                 df_big, vec_col="emb_d", id_col="vec_id",
                 exact=True, threshold=1.0, pair_impl=impl,
             ).collect()
+
+    # NaN ids rank above every other id and tie with each other, as in
+    # Spark's ordering: id NaN duplicates id 1.0, so both engines drop it
+    df_nan_id = spark.createDataFrame(
+        [(1.0, [0.5, 0.5]), (float("nan"), [0.5, 0.5]), (2.0, [0.1, 0.9])],
+        "vec_id double, emb_d array<double>",
+    )
+    # all-regular buckets (no inert row): duplicate ids, an exact
+    # threshold-1.0 tie, a zero vector, float32 input and string ids;
+    # a NaN element quantizes to 0 (id "d" ties with "a" at cos=1.0)
+    nan = float("nan")
+    df_regular = spark.createDataFrame(
+        [
+            ("b", [0.3, 0.4, 0.0]),
+            ("a", [0.3, 0.4, 0.0]),
+            ("c", [0.3, 0.4, 0.0]),
+            ("a", [0.3, 0.4, 0.0]),
+            ("c", [0.3, 0.4, 0.1]),
+            ("z", [0.0, 0.0, 0.0]),
+            ("d", [0.3, 0.4, nan]),
+        ],
+        "vec_id string, emb_d array<float>",
+    )
+    # a NULL id is never folded: its overflowing norm raises nowhere
+    df_null_id = spark.createDataFrame(
+        [(None, [1e20]), (2, [1.0]), (3, [1.0])],
+        "vec_id long, emb_d array<double>",
+    )
+    for frame, want in (
+        (df_nan_id, [1.0, 2.0]),
+        (df_regular, ["a", "a", "z"]),
+        (df_null_id, [2, None]),
+    ):
+        got = {
+            impl: sorted(
+                (r.vec_id for r in embedding_cosine_dedup(
+                    frame, vec_col="emb_d", id_col="vec_id", exact=True,
+                    threshold=1.0, num_planes=1, pair_impl=impl,
+                ).collect()),
+                key=lambda v: (v is None, v),
+            )
+            for impl in ("expr", "gram")
+        }
+        assert got["expr"] == got["gram"] == want, got
+
+    # quantization saturates ±inf and |x·10⁴| ≥ 2⁶³ to Long.MIN/MAX,
+    # whose square overflows the norm fold; a singleton whose Σq²
+    # passes int64 (each q² fits) raises too, as does one whose squares
+    # pass it before a NULL element: ARITHMETIC_OVERFLOW on both
+    # engines, even with nothing to pair against
+    for vec in (
+        [float("inf"), 0.0],
+        [float("-inf"), 0.0],
+        [1e15, 0.0],
+        [-1e15, 0.0],
+        [3e5, 3e5],
+        [3e5, 3e5, None],
+    ):
+        bad = spark.createDataFrame(
+            [(1, vec)], "vec_id long, emb_d array<double>"
+        )
+        for impl in ("expr", "gram"):
+            with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+                embedding_cosine_dedup(
+                    bad, vec_col="emb_d", id_col="vec_id", exact=True,
+                    num_planes=1, pair_impl=impl,
+                ).collect()
+
+
+def test_gram_chunked_columns_match_expr(spark, monkeypatch):
+    """A Gram chunk smaller than a bucket splits its dot matrix into
+    column blocks; the column offsets must put every pair back in
+    place, so the survivors still equal the interpreted plan's."""
+    import math
+
+    from meds_transforms_spark.operators import dedup
+
+    rows = []
+    for i in range(40):
+        a = (i % 7) * 0.4
+        vec = [math.cos(a), math.sin(a), 0.25]
+        if i % 3 == 0:
+            vec[2] += 0.001 * i  # near-duplicates, not exact ties
+        rows.append((97 - 2 * i, vec))  # ids out of input order
+    frame = spark.createDataFrame(rows, "vec_id long, emb_d array<double>")
+
+    def survivors(impl):
+        return sorted(
+            r.vec_id for r in dedup.embedding_cosine_dedup(
+                frame, vec_col="emb_d", id_col="vec_id", exact=True,
+                threshold=0.999, num_planes=1, pair_impl=impl,
+            ).collect()
+        )
+
+    want = survivors("expr")
+    assert 7 <= len(want) < 40, want
+    monkeypatch.setattr(dedup, "_GRAM_CHUNK_CELLS", 50)  # 1-2 columns a chunk
+    assert survivors("gram") == want
